@@ -525,10 +525,11 @@ def q190_cogroup_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     left join, so the exotic API path is value-gated against plain
     SQL — the parity discipline q91 applies to grouped-map.
 
-    r12 measured-and-REJECTED (tools/q190_ab_r12.py): pre-reducing the
-    per-order item totals in the JVM (guide §4's "ship decisions, not
-    payloads") before the cogroup. Rows identical, but the pre-agg
-    adds a full groupBy(l_orderkey) exchange ahead of the bucket
+    r12 measured-and-REJECTED (OPTIMIZATION_r12.md,
+    plans/r12/q190_ab.jsonl): pre-reducing the per-order item totals
+    in the JVM (guide §4's "ship decisions, not payloads") before the
+    cogroup. Rows identical, but the pre-agg adds a full
+    groupBy(l_orderkey) exchange ahead of the bucket
     exchange, and at the 100x replay that costs more than it saves at
     the Arrow boundary: old 25.7 s vs pre-reduced 27.9 s median,
     interleaved warm. The per-item shape keeps ONE corpus exchange
@@ -1263,10 +1264,10 @@ def q215_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
             # decimal(38,0), so per-replicate exactness at any scale
             # is unchanged while the per-row decimal multiply (1.5B
             # rows at 100×) becomes integer codegen. Interleaved A/B
-            # at 100×: 159→146 s (tools/q215_agg_ab_r12.py, rows
+            # at 100×: 159→146 s (plans/r12/q215_agg_ab.jsonl, rows
             # bit-identical). The md5 draw itself is the query's
             # replayable randomness — measured at ~125 s of the
-            # total (tools/q215_probe_r12.py) and irreducible.
+            # total (plans/r12/q215_probe_arms.jsonl) and irreducible.
             F.sum((F.col("w") * F.col("pm")).cast("decimal(38,0)"))
             .cast("decimal(38,0)")
             .alias("s"),

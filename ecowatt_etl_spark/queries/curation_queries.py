@@ -1095,13 +1095,13 @@ def q192_ngram_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXPLODED, and Generate over the zip-built array costs ~53 s vs
     # ~31 s over the transform-built one — the explode is where this
     # query lives, so the transform form wins end-to-end
-    # (tools/q192_probe_r12.py; q95, whose grams never explode, keeps
-    # the zip form for the same reason). Field names/types and
-    # values are identical (t[i..i+4] per position i), so struct
-    # join keys are unchanged. Short docs: whole-text single gram,
-    # mirroring shingles()'s ELSE arm; the padding fields are empty
-    # strings, which no real token can be, so short-doc grams never
-    # collide with full grams.
+    # (OPTIMIZATION_r12.md, plans/r12/q192_probe_arms.jsonl; q95,
+    # whose grams never explode, keeps the zip form for the same
+    # reason). Field names/types and values are identical (t[i..i+4]
+    # per position i), so struct join keys are unchanged. Short docs:
+    # whole-text single gram, mirroring shingles()'s ELSE arm; the
+    # padding fields are empty strings, which no real token can be, so
+    # short-doc grams never collide with full grams.
     gram_fields = ", ".join(
         f"element_at(tk, i + {k}) AS `{k}`" for k in range(_OVL_N)
     )

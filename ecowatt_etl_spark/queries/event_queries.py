@@ -1310,7 +1310,7 @@ def q133_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="update",
         # scale-adaptive state sizing (r12): measured 73.7 -> 26.4 s at
         # the 100x replay, gate scale unchanged (see
-        # replay_state_partitions / tools/stream_ab_r12.py)
+        # replay_state_partitions / plans/r12/stream_ab.jsonl)
         shuffle_partitions=replay_state_partitions(spark, sf_dir),
     )
 
@@ -2714,7 +2714,7 @@ def q252_stream_clamped_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         output_mode="update",
         # scale-adaptive state sizing (r12): measured 70.9 -> 22.9 s at
         # the 100x replay, gate scale unchanged (see
-        # replay_state_partitions / tools/stream_ab_r12.py)
+        # replay_state_partitions / plans/r12/stream_ab.jsonl)
         shuffle_partitions=replay_state_partitions(spark, sf_dir),
     )
 

@@ -22,7 +22,7 @@ from ecowatt_etl_spark.operators.text import (
     tokens,
 )
 from ecowatt_etl_spark.queries.registry import query
-from ecowatt_etl_spark.sources.tables import load_table
+from ecowatt_etl_spark.sources.tables import file_memo, load_table
 
 from ecowatt_etl_spark.operators.text import (  # noqa: E402
     SQL_TOKENS as _SQL_TOKENS,
@@ -662,11 +662,19 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    n_docs = dl.count()
-    df_map = {
-        r["term"]: r["df"]
-        for r in tf.groupBy("term").agg(F.count("*").alias("df")).collect()
-    }
+    # corpus size and per-term document frequency: computed once per
+    # version of the documents file, so a warm call plans without a job
+    n_docs, df_map = file_memo(
+        f"{sf_dir}/documents.parquet",
+        ("bm25_df",),
+        lambda: (
+            dl.count(),
+            {
+                r["term"]: r["df"]
+                for r in tf.groupBy("term").agg(F.count("*").alias("df")).collect()
+            },
+        ),
+    )
     idf_col = None
     for term in _SEARCH_TERMS:
         dfv = df_map.get(term, 0)

@@ -11,7 +11,14 @@ query actually needs everything.
 
 from __future__ import annotations
 
+import os
+import threading
+import weakref
+from typing import Callable, TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
+
+V = TypeVar("V")
 
 # The scale the driver's DuckDB value-check runs at. Oracle SQL strings
 # are fixed at import time and cannot take sf_dir, so queries whose
@@ -44,8 +51,98 @@ _TS_COLUMNS: dict[str, tuple[str, ...]] = {
 }
 
 
+# Parquet confs the inferred schema depends on: part of the schema memo's
+# key, so a session that reads the same file differently gets its own entry.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# file_memo's entries and per-key build locks. Entries are small driver-side
+# values (schemas, corpus counts) keyed on a file version, so they hold no
+# executor blocks and are never stale: they are not session artifacts, and
+# evict_session_artifacts leaves them alone.
+_FILE_MEMO: dict[tuple, object] = {}
+_FILE_MEMO_LOCKS: dict[tuple, threading.Lock] = {}
+_GUARD = threading.Lock()
+# sessions whose timestamp confs load_table has pinned; held weakly so a
+# stopped session's slot cannot be inherited by a new one
+_PINNED: weakref.WeakSet = weakref.WeakSet()
+
+
+def _file_version(path: str) -> tuple | None:
+    """Identity of the bytes at a local path: (absolute path, size,
+    mtime_ns) for a file; for a directory, the absolute path and the
+    sorted (relative name, size, mtime_ns) listing of every file under
+    it. None for a path that is not local or is changing under the
+    listing — the caller then computes without the memo."""
+    root = os.path.abspath(path)
+    try:
+        if os.path.isfile(root):
+            st = os.stat(root)
+            return (root, st.st_size, st.st_mtime_ns)
+        if not os.path.isdir(root):
+            return None
+        listing = []
+        for d, _, files in os.walk(root):
+            for f in files:
+                st = os.stat(os.path.join(d, f))
+                rel = os.path.relpath(os.path.join(d, f), root)
+                listing.append((rel, st.st_size, st.st_mtime_ns))
+        return (root, tuple(sorted(listing)))
+    except OSError:
+        return None
+
+
+def file_memo(path: str, tag: tuple, build: Callable[[], V]) -> V:
+    """``build()``, computed once per ``tag`` and version of the file (or
+    directory) at ``path`` in this process, for values derived from the
+    file's bytes alone. Rewriting the file changes its version, so the
+    next call builds again. Concurrent first calls for one key build
+    once: the others wait on that key's lock."""
+    version = _file_version(path)
+    if version is None:
+        return build()
+    key = (tag, version)
+    with _GUARD:
+        lock = _FILE_MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _FILE_MEMO:
+            _FILE_MEMO[key] = build()
+    return _FILE_MEMO[key]
+
+
+def pin_timestamp_confs(spark: SparkSession) -> None:
+    """Enable nanosAsLong and pin the session zone to UTC, once per
+    session: the side effect load_table documents, shared by the
+    streaming events reader."""
+    with _GUARD:
+        if spark in _PINNED:
+            return
+        # runtime-settable; needed even when the caller's session was not
+        # built by get_spark (e.g. the verification driver's own session)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # the NTZ→LTZ cast in load_table is only deterministic under a
+        # pinned zone
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        _PINNED.add(spark)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy columnar scan of one warehouse table.
+
+    Schema memo: the parquet schema Spark infers (a Spark job) is
+    memoised by ``file_memo``, keyed on the file's version — absolute
+    path, size and ``mtime_ns``, or for a directory the listing of its
+    files — and on the parquet confs inference reads (``_INFER_CONFS``).
+    Later calls read with that schema and launch no job; a table
+    rewritten in place gets a new key and is inferred again, never
+    served stale. Only the schema is memoised: every call returns a
+    FRESH relation with its own attribute ids, so two loads of one
+    table self-join like two independent scans.
 
     Timestamp normalization — the synthetic warehouse has been written
     by several parquet producers across driver rounds, so ``events.ts``
@@ -63,16 +160,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       DuckDB's naive-timestamp reading of the same file.
     * TIMESTAMP(MICROS, adjusted): already TIMESTAMP — no-op.
 
-    SIDE EFFECT, by design: for timestamp-bearing tables this pins the
-    CALLER session's ``spark.sql.session.timeZone`` to UTC (and enables
-    ``nanosAsLong``) for the remainder of the session — the NTZ→LTZ
-    cast and the engine's formatted-timestamp outputs are only
-    deterministic under a pinned zone, and the verification driver's
-    plain session arrives unpinned. A non-UTC consumer session will see
-    its timestamp FORMATTING (date_format, casts to string) switch to
-    UTC after the first events/orders/lineitem scan. That is the
-    engine's documented contract — all published results are UTC; a
-    caller needing wall-clock rendering in another zone should convert
+    SIDE EFFECT, by design: the first scan of a timestamp-bearing table
+    (events/orders/lineitem) in a session pins that CALLER session's
+    ``spark.sql.session.timeZone`` to UTC (and enables ``nanosAsLong``)
+    for the remainder of the session. The confs are written once per
+    session (tracked weakly, by session object), not on every call —
+    the NTZ→LTZ cast and the engine's formatted-timestamp outputs are
+    only deterministic under a pinned zone, and the verification
+    driver's plain session arrives unpinned. A non-UTC consumer session
+    will see its timestamp FORMATTING (date_format, casts to string)
+    switch to UTC after that first scan. That is the engine's
+    documented contract — all published results are UTC; a caller
+    needing wall-clock rendering in another zone should convert
     explicitly with from_utc_timestamp rather than rely on session-zone
     formatting.
     """
@@ -81,12 +180,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ts_cols = _TS_COLUMNS.get(name, ())
     if ts_cols:
-        # runtime-settable; needed even when the caller's session was not
-        # built by get_spark (e.g. the verification driver's own session)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # NTZ→LTZ cast below is only deterministic under a pinned zone.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        pin_timestamp_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+    schema = file_memo(
+        path, ("schema", confs), lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     for col in ts_cols:
         if col not in df.columns:  # partial-schema fixtures (tests)
             continue

@@ -20,6 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ecowatt_etl_spark.sources.tables import pin_timestamp_confs
+
+
 def _events_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -60,8 +63,7 @@ def read_events_stream(
 
     import pyarrow.parquet as pq
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_timestamp_confs(spark)
     # driver-side footer check over the bounded replay file list (at
     # scale: a metastore/schema-registry lookup instead)
     files = sorted(
@@ -113,9 +115,10 @@ def replay_state_partitions(
     so a constant partition count is wrong at one end or the other:
     measured interleaved at the 100x replay (164 MB, 150k keys,
     32 cores) 8 partitions → 32 gives q133 73.7 → 26.4 s and q252
-    70.9 → 22.9 s (tools/stream_ab_r12.py), while at gate scale
-    (2 MB) the r11 invariant note measured default-8 WINNING — extra
-    partitions are pure per-micro-batch overhead on tiny batches.
+    70.9 → 22.9 s (OPTIMIZATION_r12.md, plans/r12/stream_ab.jsonl),
+    while at gate scale (2 MB) the r11 invariant note measured
+    default-8 WINNING — extra partitions are pure per-micro-batch
+    overhead on tiny batches.
     4 MB/partition puts the crossover between those two measured
     points (gate stays at the floor of 8; 100x saturates to the core
     count). Values are partition-count-invariant by construction —
