@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ecowatt_etl_spark.operators.dedup import shingle_hashes
 from ecowatt_etl_spark.operators.text import token_count, tokens
 from ecowatt_etl_spark.queries.registry import query
-from ecowatt_etl_spark.sources.tables import load_table
+from ecowatt_etl_spark.sources.tables import file_memo, load_table
 
 _SQL_W = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -1121,10 +1121,12 @@ def q192_ngram_overlap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_grams = base.filter(F.col("source") != _EVAL_SRC).select(
         F.explode(grams).alias("gh")
     )
-    bcast_ok = (
-        d.filter(F.col("source") == _EVAL_SRC).count()
-        <= _OVL_BCAST_MAX_EVAL_DOCS
+    n_eval = file_memo(  # once per documents version: warm builds run no job
+        f"{sf_dir}/documents.parquet",
+        ("eval_docs", _EVAL_SRC),
+        lambda: d.filter(F.col("source") == _EVAL_SRC).count(),
     )
+    bcast_ok = n_eval <= _OVL_BCAST_MAX_EVAL_DOCS
     probe = F.broadcast(ev_set) if bcast_ok else ev_set
     hit_set = train_grams.join(probe, "gh", "left_semi").distinct()
     hits = hit_set.withColumn("hit", F.lit(1))

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ecowatt_etl_spark.cache import ArtifactCache
 from ecowatt_etl_spark.operators.similarity import (
     cosine,
     dot_fold,
@@ -322,33 +323,26 @@ def q64_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= _TOPK)
 
 
-_IVF_INDEX_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+_IVF_INDEX_CACHE = ArtifactCache()
 
 
 def _ivf_cells(
-    spark: SparkSession,
-    sf_dir: str,
-    em: DataFrame,
-    cent: DataFrame,
-    variant: str = "trained",
+    spark: SparkSession, sf_dir: str, em: DataFrame, cent: DataFrame
 ) -> DataFrame:
     """Build (or fetch) the IVF inverted file: every corpus vector
-    assigned to its nearest centroid. localCheckpoint materializes the
-    assignment once per (session, sf_dir, quantizer variant) — the
+    assigned to its nearest trained centroid. localCheckpoint
+    materializes the assignment once per (session, sf_dir) — the
     offline index-build step of a real ANN deployment, amortized
-    across query batches. ``variant`` keys the cache so alternative
-    quantizers over the same corpus coexist (every shipped consumer
-    uses the trained quantizer since r9)."""
-    key = (id(spark), sf_dir, variant)
-    if key not in _IVF_INDEX_CACHE:
+    across query batches."""
+    def build():
         # FLOP-bound assignment (K folds per vector): spread a
         # byte-compact vector scan across cores first
-        em = spread_to_parallelism(em)
+        spread = spread_to_parallelism(em)
         asg_score = F.try_divide(
             dot_fold(F.col("embedding"), F.col("c_emb")), F.col("c_norm")
         )
         best = (
-            em.crossJoin(cent)
+            spread.crossJoin(cent)
             .select(
                 "vec_id",
                 asg_score.alias("s"),
@@ -358,9 +352,10 @@ def _ivf_cells(
             .agg(F.max(F.struct(F.col("s"), (-F.col("cid")).alias("nc"))).alias("m"))
             .select("vec_id", (-F.col("m.nc")).alias("cid"))
         )
-        cells = em.join(best, "vec_id").select("vec_id", "embedding", "cid")
-        _IVF_INDEX_CACHE[key] = cells.localCheckpoint()
-    return _IVF_INDEX_CACHE[key]
+        cells = spread.join(best, "vec_id").select("vec_id", "embedding", "cid")
+        return cells.localCheckpoint()
+
+    return _IVF_INDEX_CACHE.get((spark, sf_dir, "trained"), build)
 
 
 def _ivf_cells_dual(
@@ -378,8 +373,7 @@ def _ivf_cells_dual(
     (score DESC, cid ASC) is ROW_NUMBER's, bit-identical to the
     oracle's ark ranking. Cached once per (session, sf_dir) like the
     single-assignment index."""
-    key = (id(spark), sf_dir, "trained-dual")
-    if key not in _IVF_INDEX_CACHE:
+    def build():
         scored = spread_to_parallelism(em).crossJoin(cent).select(
             "vec_id",
             F.try_divide(
@@ -409,8 +403,9 @@ def _ivf_cells_dual(
         cells = em.join(exploded, "vec_id").select(
             "vec_id", "embedding", "cid", "other_cid"
         )
-        _IVF_INDEX_CACHE[key] = cells.localCheckpoint()
-    return _IVF_INDEX_CACHE[key]
+        return cells.localCheckpoint()
+
+    return _IVF_INDEX_CACHE.get((spark, sf_dir, "trained-dual"), build)
 
 
 # ---------------------------------------------------------------------------
@@ -440,7 +435,7 @@ def _ivf_cells_dual(
 # rule keeps the probed fraction sublinear.
 _IVF_K, _IVF_ROUNDS = 64, 3
 
-_TRAINED_CENT_CACHE: dict[tuple[int, str], DataFrame] = {}
+_TRAINED_CENT_CACHE = ArtifactCache()
 
 
 def _trained_centroids(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFrame:
@@ -448,19 +443,17 @@ def _trained_centroids(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataF
     their norms, materialized once per (session, sf_dir) — the offline
     model-build step, amortized across query batches like the
     inverted file itself."""
-    key = (id(spark), sf_dir)
-    if key not in _TRAINED_CENT_CACHE:
+    def build():
         from ecowatt_etl_spark.operators.similarity import kmeans_train
 
         cents, _ = kmeans_train(em, k=_IVF_K, rounds=_IVF_ROUNDS)
-        _TRAINED_CENT_CACHE[key] = (
-            cents.select(
-                "cid",
-                F.col("centroid").alias("c_emb"),
-                l2_norm(F.col("centroid")).alias("c_norm"),
-            ).localCheckpoint()
-        )
-    return _TRAINED_CENT_CACHE[key]
+        return cents.select(
+            "cid",
+            F.col("centroid").alias("c_emb"),
+            l2_norm(F.col("centroid")).alias("c_norm"),
+        ).localCheckpoint()
+
+    return _TRAINED_CENT_CACHE.get((spark, sf_dir), build)
 
 
 def _sql_kmeans_cents(
@@ -604,7 +597,7 @@ def q65_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     amortizes."""
     em = load_table(spark, sf_dir, "embeddings")
     cent_df = _trained_centroids(spark, sf_dir, em)
-    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df), "trained")
+    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df))
     return _ivf_serve(em, cent_df, cells)
 
 
@@ -690,7 +683,7 @@ def ivf_candidate_frac(spark: SparkSession, sf_dir: str) -> float:
     cent_df = _trained_centroids(spark, sf_dir, em)
     cent = F.broadcast(cent_df)
     n_cells = cent_df.agg(F.count("*").alias("n_cells"))
-    cells = _ivf_cells(spark, sf_dir, em, cent, "trained")
+    cells = _ivf_cells(spark, sf_dir, em, cent)
     p_w = W.partitionBy("query_id").orderBy(F.desc("p_sim"), F.asc("cid"))
     probes = F.broadcast(
         em.filter(F.col("vec_id") < _NQ)
@@ -1325,7 +1318,7 @@ def q123_diversity_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-stable."""
     em = load_table(spark, sf_dir, "embeddings")
     cent = F.broadcast(_trained_centroids(spark, sf_dir, em))
-    cells = _ivf_cells(spark, sf_dir, em, cent, "trained")
+    cells = _ivf_cells(spark, sf_dir, em, cent)
     scored = cells.join(
         cent.select(F.col("cid").cast("long").alias("c_cid"), "c_emb", "c_norm"),
         cells["cid"] == F.col("c_cid"),
@@ -1383,7 +1376,7 @@ _PQ_REFINE = 256
 _PQ_REFINE_DIV = 20
 
 
-_PQ_CODEBOOK_CACHE: dict[tuple[int, str], list[DataFrame]] = {}
+_PQ_CODEBOOK_CACHE = ArtifactCache()
 
 
 def _pq_codebooks(spark: SparkSession, sf_dir: str, em: DataFrame) -> list[DataFrame]:
@@ -1391,8 +1384,7 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, em: DataFrame) -> list[DataF
     (cid, c_emb) frame per subspace, materialized once per (session,
     sf_dir): the offline codebook-build step q154 (encode) and q156
     (ADC search) both serve from."""
-    key = (id(spark), sf_dir)
-    if key not in _PQ_CODEBOOK_CACHE:
+    def build():
         from ecowatt_etl_spark.operators.similarity import kmeans_train
 
         books = []
@@ -1409,11 +1401,12 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str, em: DataFrame) -> list[DataF
             books.append(
                 cents.select("cid", F.col("centroid").alias("c_emb")).localCheckpoint()
             )
-        _PQ_CODEBOOK_CACHE[key] = books
-    return _PQ_CODEBOOK_CACHE[key]
+        return books
+
+    return _PQ_CODEBOOK_CACHE.get((spark, sf_dir), build)
 
 
-_PQ_BOOKS_ALL_CACHE: dict[tuple[int, str], DataFrame] = {}
+_PQ_BOOKS_ALL_CACHE = ArtifactCache()
 
 
 def _pq_codebooks_all(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFrame:
@@ -1422,8 +1415,7 @@ def _pq_codebooks_all(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFr
     joining every codebook (q156's ADC lookup table) costs one scan of
     one tiny artifact instead of an 8-branch union re-deriving each
     codebook's lineage."""
-    key = (id(spark), sf_dir)
-    if key not in _PQ_BOOKS_ALL_CACHE:
+    def build():
         books = _pq_codebooks(spark, sf_dir, em)
         tagged = [
             b.select(F.lit(m).alias("subspace"), "cid", "c_emb")
@@ -1432,11 +1424,12 @@ def _pq_codebooks_all(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFr
         u = tagged[0]
         for other in tagged[1:]:
             u = u.unionByName(other)
-        _PQ_BOOKS_ALL_CACHE[key] = u.localCheckpoint()
-    return _PQ_BOOKS_ALL_CACHE[key]
+        return u.localCheckpoint()
+
+    return _PQ_BOOKS_ALL_CACHE.get((spark, sf_dir), build)
 
 
-_PQ_CODES_CACHE: dict[tuple[int, str], DataFrame] = {}
+_PQ_CODES_CACHE = ArtifactCache()
 
 
 def _pq_codes(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFrame:
@@ -1446,36 +1439,35 @@ def _pq_codes(spark: SparkSession, sf_dir: str, em: DataFrame) -> DataFrame:
     once per (session, sf_dir): the code table IS the stored index
     artifact ADC serves from, so per-call re-derivation would misstate
     the serve cost (same rationale as the cells/codebook caches)."""
-    ckey = (id(spark), sf_dir)
-    if ckey in _PQ_CODES_CACHE:
-        return _PQ_CODES_CACHE[ckey]
-    books = _pq_codebooks(spark, sf_dir, em)
-    outs = []
-    for m in range(_PQ_M):
-        sub = F.slice("embedding", m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-        sub_em = em.select("vec_id", sub.alias("embedding"))
-        x, c = F.col("embedding"), F.col("c_emb")
-        d2 = (
-            dot_fold(x, x)
-            - 2 * dot_fold(x, c)
-            + dot_fold(c, c)
-        ).alias("d2")
-        scored = sub_em.join(F.broadcast(books[m])).select("vec_id", "cid", d2)
-        outs.append(
-            scored.groupBy("vec_id")
-            .agg(F.min(F.struct("d2", "cid")).alias("b"))
-            .select(
-                "vec_id",
-                F.lit(m).alias("subspace"),
-                F.col("b.cid").alias("code"),
-                F.col("b.d2").alias("recon_err"),
+    def build():
+        books = _pq_codebooks(spark, sf_dir, em)
+        outs = []
+        for m in range(_PQ_M):
+            sub = F.slice("embedding", m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
+            sub_em = em.select("vec_id", sub.alias("embedding"))
+            x, c = F.col("embedding"), F.col("c_emb")
+            d2 = (
+                dot_fold(x, x)
+                - 2 * dot_fold(x, c)
+                + dot_fold(c, c)
+            ).alias("d2")
+            scored = sub_em.join(F.broadcast(books[m])).select("vec_id", "cid", d2)
+            outs.append(
+                scored.groupBy("vec_id")
+                .agg(F.min(F.struct("d2", "cid")).alias("b"))
+                .select(
+                    "vec_id",
+                    F.lit(m).alias("subspace"),
+                    F.col("b.cid").alias("code"),
+                    F.col("b.d2").alias("recon_err"),
+                )
             )
-        )
-    res = outs[0]
-    for other in outs[1:]:
-        res = res.unionByName(other)
-    _PQ_CODES_CACHE[ckey] = res.localCheckpoint()
-    return _PQ_CODES_CACHE[ckey]
+        res = outs[0]
+        for other in outs[1:]:
+            res = res.unionByName(other)
+        return res.localCheckpoint()
+
+    return _PQ_CODES_CACHE.get((spark, sf_dir), build)
 
 
 def _pq_asg_sql(m: int) -> str:
@@ -1785,7 +1777,7 @@ def _banded_candidates(
     return out
 
 
-_CELL_PAIRS_CACHE: dict = {}
+_CELL_PAIRS_CACHE = ArtifactCache()
 
 
 def _cell_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1802,14 +1794,11 @@ def _cell_banded_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer's own action materializes it (one pass, no separate
     build job — the q144/q214 cold-path lesson); later consumers read
     blocks. evict_session_artifacts clears it between families."""
-    key = (id(spark), sf_dir)
-    if key not in _CELL_PAIRS_CACHE:
-        _CELL_PAIRS_CACHE[key] = (
-            _banded_candidates(spark, sf_dir)
-            .filter(F.col("cosine_sim") >= _COS_T)
-            .localCheckpoint(eager=False)
-        )
-    return _CELL_PAIRS_CACHE[key]
+    def build():
+        pairs = _banded_candidates(spark, sf_dir)
+        return pairs.filter(F.col("cosine_sim") >= _COS_T).localCheckpoint(eager=False)
+
+    return _CELL_PAIRS_CACHE.get((spark, sf_dir), build)
 
 
 def cell_band_stats(spark: SparkSession, sf_dir: str) -> dict:
@@ -2226,7 +2215,7 @@ def q286_semantic_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _cell_banded_pairs(spark, sf_dir).filter(
         F.col("cosine_sim") >= _SEM_CLUSTER_T
     )
-    labels = _shortcut_cc(spark, _sym_edges(pairs))
+    labels = _shortcut_cc(_sym_edges(pairs))
     tok = doc_token_stats(spark, sf_dir).select(
         F.col("doc_id").alias("vec_id"), "n_tok"
     )
@@ -2388,7 +2377,7 @@ def q156_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     published per round in bench extras next to q64/q65's."""
     em = load_table(spark, sf_dir, "embeddings")
     cent = F.broadcast(_trained_centroids(spark, sf_dir, em))
-    cells = _ivf_cells(spark, sf_dir, em, cent, "trained").select("vec_id", "cid")
+    cells = _ivf_cells(spark, sf_dir, em, cent).select("vec_id", "cid")
     codes = _pq_codes(spark, sf_dir, em).select("vec_id", "subspace", "code")
 
     # per-query ADC lookup table: (query_id, subspace, code, partial) —
@@ -2568,7 +2557,7 @@ def q158_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     cent = F.broadcast(_trained_centroids(spark, sf_dir, em))
-    cells = _ivf_cells(spark, sf_dir, em, cent, "trained")
+    cells = _ivf_cells(spark, sf_dir, em, cent)
     n_cells = _trained_centroids(spark, sf_dir, em).agg(
         F.count("*").alias("n_cells")
     )
@@ -2668,7 +2657,7 @@ def q129_semantic_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     cent = F.broadcast(_trained_centroids(spark, sf_dir, em))
-    best = _ivf_cells(spark, sf_dir, em, cent, "trained").select(
+    best = _ivf_cells(spark, sf_dir, em, cent).select(
         "vec_id", "cid"
     )
     g = (
@@ -2719,7 +2708,7 @@ def q196_ivf_persist_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load_table(spark, sf_dir, "embeddings")
     cent_df = _trained_centroids(spark, sf_dir, em)
-    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df), "trained")
+    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df))
 
     root = f"{SCRATCH_ROOT}/{bucket_token(sf_dir)}"
     cent_path, cells_path = f"{root}/ivf_centroids", f"{root}/ivf_cells"
@@ -2924,7 +2913,7 @@ def q201_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes directory pruning and reads NOTHING outside the tenant."""
     em = load_table(spark, sf_dir, "embeddings")
     cent_df = _trained_centroids(spark, sf_dir, em)
-    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df), "trained")
+    cells = _ivf_cells(spark, sf_dir, em, F.broadcast(cent_df))
     lab = em.select("vec_id", "label")
     cells_f = cells.join(lab, "vec_id").filter(
         F.col("label") == _FILT_LABEL

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ecowatt_etl_spark.cache import ArtifactCache
 from ecowatt_etl_spark.operators.text import (
     HASH_PRIME,
     LANG_MARKERS,
@@ -1116,7 +1117,7 @@ _BPE_SCHEMA = "merge_rank int, left string, right string, merged string, pair_fr
 # IVF index): a real pipeline trains the tokenizer once and ships the
 # tiny merge table to every encode job, so per-call retraining would
 # misstate both semantics and cost.
-_BPE_MERGE_CACHE: dict[tuple[int, str], list] = {}
+_BPE_MERGE_CACHE = ArtifactCache()
 
 
 def _corpus_word_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1135,12 +1136,11 @@ def trained_merges(spark: SparkSession, sf_dir: str) -> list:
     """Train (once per session × sf_dir) and cache the BPE merge rows."""
     from ecowatt_etl_spark.operators.bpe import train_bpe
 
-    key = (id(spark), sf_dir)
-    if key not in _BPE_MERGE_CACHE:
-        _BPE_MERGE_CACHE[key] = train_bpe(
-            spark, _corpus_word_freq(spark, sf_dir), _BPE_MERGES
-        ).collect()
-    return _BPE_MERGE_CACHE[key]
+    def build():
+        freq = _corpus_word_freq(spark, sf_dir)
+        return train_bpe(spark, freq, _BPE_MERGES).collect()
+
+    return _BPE_MERGE_CACHE.get((spark, sf_dir), build)
 
 
 @query("q139_bpe_train")

@@ -12,9 +12,12 @@ via spark-submit conf; nothing here hard-codes local mode semantics.
 
 from __future__ import annotations
 
+import gc
 import os
 
 from pyspark.sql import SparkSession
+
+from ecowatt_etl_spark.cache import SESSION_CACHES
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -129,51 +132,21 @@ def get_spark(
 
 
 def evict_session_artifacts(spark: SparkSession) -> int:
-    """Drop every session-scoped artifact cache — the localCheckpointed
-    dedup shingle/band/verified-pairs indexes, the ANN
-    centroid/cell/codebook/code artifacts, the BPE merge tables, and
-    the EcoWatt star frames — and release their executor blocks.
+    """Clear every session-artifact cache (dedup, ANN and token-stats
+    indexes, BPE merge tables, the EcoWatt star) and release their
+    executor blocks; returns the number of evicted entries. Each cache
+    is an ``ArtifactCache`` that registers itself in
+    ``cache.SESSION_CACHES`` when it is created, so none is listed here.
+    ``sources.tables``' file-version memo does not register.
 
-    Why this exists (r6 verdict item 4): the artifact caches model
-    offline-built indexes and are the right default for a serving
-    session, but a long shared session that touches MANY scales/
-    families accumulates pinned localCheckpoint blocks; at 100x the
-    gate scale that block-manager pressure was measured slowing an
-    unrelated sort-heavy query (q42: 34.6 s fresh vs 116 s late in a
-    loaded probe session). Probe harnesses and scale sweeps call this
-    between families so cross-query memory pressure is a CHOICE, not
-    an accident. Returns the number of evicted cache entries.
-
-    Block release is the standard Spark lifecycle: clearing the dicts
-    drops the last Python references, gc.collect() releases the py4j
-    handles, and the JVM ContextCleaner then frees the RDD blocks
-    asynchronously (tests poll getRDDStorageInfo for the drain)."""
-    import gc
-
-    from ecowatt_etl_spark.operators import text as text_ops
-    from ecowatt_etl_spark.queries import (  # local import: no cycle
-        dedup_queries,
-        ecowatt_queries,
-        similarity_queries,
-        text_queries,
-    )
-
-    caches = (
-        dedup_queries._IDX_CACHE,
-        dedup_queries._PAIRS_CACHE,
-        ecowatt_queries._STAR_CACHE,
-        similarity_queries._IVF_INDEX_CACHE,
-        similarity_queries._TRAINED_CENT_CACHE,
-        similarity_queries._CELL_PAIRS_CACHE,
-        similarity_queries._PQ_CODEBOOK_CACHE,
-        similarity_queries._PQ_BOOKS_ALL_CACHE,
-        similarity_queries._PQ_CODES_CACHE,
-        text_queries._BPE_MERGE_CACHE,
-        text_ops._TOKEN_STATS_CACHE,
-    )
-    n = sum(len(c) for c in caches)
-    for c in caches:
-        c.clear()
+    Why (r6 verdict item 4): a long shared session that touches many
+    scales and families accumulates pinned localCheckpoint blocks; at
+    100x the gate scale they slowed an unrelated sort-heavy query (q42:
+    34.6 s fresh vs 116 s late in a loaded session). Probe harnesses and
+    scale sweeps call this between families. Clearing drops the last
+    Python references, gc.collect() releases the py4j handles, and the
+    JVM ContextCleaner then frees the blocks asynchronously."""
+    n = sum(c.clear() for c in list(SESSION_CACHES))
     spark.catalog.clearCache()
     gc.collect()
     return n

@@ -18,6 +18,8 @@ from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ecowatt_etl_spark.cache import ArtifactCache
+
 V = TypeVar("V")
 
 # The scale the driver's DuckDB value-check runs at. Oracle SQL strings
@@ -61,12 +63,9 @@ _INFER_CONFS = (
     "spark.sql.parquet.mergeSchema",
 )
 
-# file_memo's entries and per-key build locks. Entries are small driver-side
-# values (schemas, corpus counts) keyed on a file version, so they hold no
-# executor blocks and are never stale: they are not session artifacts, and
-# evict_session_artifacts leaves them alone.
-_FILE_MEMO: dict[tuple, object] = {}
-_FILE_MEMO_LOCKS: dict[tuple, threading.Lock] = {}
+# file_memo's entries (schemas, corpus counts) hold no executor blocks and
+# are never stale, so they are not session artifacts
+_FILE_MEMO = ArtifactCache(session_artifacts=False)
 _GUARD = threading.Lock()
 # sessions whose timestamp confs load_table has pinned; held weakly so a
 # stopped session's slot cannot be inherited by a new one
@@ -101,18 +100,11 @@ def file_memo(path: str, tag: tuple, build: Callable[[], V]) -> V:
     """``build()``, computed once per ``tag`` and version of the file (or
     directory) at ``path`` in this process, for values derived from the
     file's bytes alone. Rewriting the file changes its version, so the
-    next call builds again. Concurrent first calls for one key build
-    once: the others wait on that key's lock."""
+    next call builds again; concurrent first calls build once."""
     version = _file_version(path)
     if version is None:
         return build()
-    key = (tag, version)
-    with _GUARD:
-        lock = _FILE_MEMO_LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        if key not in _FILE_MEMO:
-            _FILE_MEMO[key] = build()
-    return _FILE_MEMO[key]
+    return _FILE_MEMO.get((tag, version), build)
 
 
 def pin_timestamp_confs(spark: SparkSession) -> None:

@@ -275,7 +275,7 @@ def test_q283_shortcut_matches_q57_and_beats_its_round_bound(spark):
         "id_a long, id_b long, jaccard_sim double",
     )
     key = "synthetic-chain-300"
-    dq._PAIRS_CACHE[(id(spark), key)] = chain
+    dq._PAIRS_CACHE.get((spark, key), lambda: chain)
     try:
         got = {
             r["doc_id"]: r["cluster_id"]
@@ -287,4 +287,4 @@ def test_q283_shortcut_matches_q57_and_beats_its_round_bound(spark):
         with _pytest.raises(RuntimeError, match="did not converge"):
             dq.q57_dedup_clusters(spark, key)
     finally:
-        del dq._PAIRS_CACHE[(id(spark), key)]
+        del dq._PAIRS_CACHE[(spark, key)]

@@ -108,7 +108,10 @@ def test_second_load_of_one_file_launches_no_job(spark, tmp_path):
     assert df.columns == ["r_regionkey", "r_name"]
 
 
-@pytest.mark.parametrize("name", ["q153_bm25_search", "q202_hybrid_rrf", "q12_star_join"])
+@pytest.mark.parametrize(
+    "name",
+    ["q153_bm25_search", "q202_hybrid_rrf", "q12_star_join", "q192_ngram_overlap_report"],
+)
 def test_warm_query_build_launches_no_job(spark, name):
     from ecowatt_etl_spark.queries.registry import all_queries
 

@@ -36,20 +36,6 @@ from pyspark.sql import functions as F  # noqa: E402
 SF = os.environ.get("ANN_SF", "/root/testdata/sf0.1")
 
 
-def _clear_caches(sq, spark, sf_dir: str) -> None:
-    """Drop this (session, sf_dir)'s cached ANN artifacts so build cost
-    is measured cold. Keys are (id(spark), sf_dir[, tag]) tuples."""
-    for cache in (
-        sq._IVF_INDEX_CACHE,
-        sq._TRAINED_CENT_CACHE,
-        sq._PQ_CODEBOOK_CACHE,
-        sq._PQ_BOOKS_ALL_CACHE,
-        sq._PQ_CODES_CACHE,
-    ):
-        for key in [k for k in cache if k[0] == id(spark) and sf_dir in k]:
-            del cache[key]
-
-
 def _topk_sets(rows) -> dict[int, set[int]]:
     out: dict[int, set[int]] = {}
     for r in rows:
@@ -77,19 +63,19 @@ def _serve(fn, spark, sf_dir: str) -> tuple[float, list]:
 def main() -> None:
     from ecowatt_etl_spark.queries import similarity_queries as sq
     from ecowatt_etl_spark.queries.registry import all_queries
-    from ecowatt_etl_spark.session import get_spark
+    from ecowatt_etl_spark.session import evict_session_artifacts, get_spark
     from ecowatt_etl_spark.sources.tables import load_table
 
     spark = get_spark(app_name="ann-decompose")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
-    _clear_caches(sq, spark, SF)
+    evict_session_artifacts(spark)  # build cost is measured cold
 
     em = load_table(spark, SF, "embeddings")
 
     t0 = time.monotonic()
     cent = sq._trained_centroids(spark, SF, em)
-    sq._ivf_cells(spark, SF, em, F.broadcast(cent), "trained")
+    sq._ivf_cells(spark, SF, em, F.broadcast(cent))
     q65_build = round(time.monotonic() - t0, 3)
 
     q65_serve, q65_rows = _serve(specs["q65_ivf_topk"].fn, spark, SF)

@@ -66,8 +66,8 @@ def main() -> None:
 
     def rebuild_session(old_spark):
         # a dead JVM leaves a dead cached gateway; clear it so
-        # getOrCreate launches a fresh one. Session caches key on
-        # id(spark), so downstream artifact caches miss cleanly.
+        # getOrCreate launches a fresh one. Session caches key on the
+        # session object, so downstream artifact caches miss cleanly.
         try:
             old_spark.stop()
         except Exception:
