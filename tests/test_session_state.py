@@ -1,10 +1,12 @@
-"""Query paths leave the shared session alone.
+"""Query paths leave the shared session alone, and reuse what it built.
 
 Under concurrent serving, every request plans against one session: a
 query that writes session-global SQL conf changes what another request
 plans with, and a cache keyed on ``id(spark)`` can hand a new session a
 stopped one's artifact. The runtime test catches a conf write while a
 query runs; the source guards keep both patterns out of the package.
+The codegen test checks that a warm request reuses the classes an
+earlier one compiled instead of compiling them again.
 """
 
 from __future__ import annotations
@@ -14,12 +16,24 @@ import pathlib
 import threading
 
 from tests.conftest import SF_ORACLE as SF
+from tests.conftest import SF_SMOKE
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "ecowatt_etl_spark"
 
 # The streaming replays' RocksDB provider choice is still set and
 # restored per run. ROADMAP direction 4 removes these two sites by
 # building each replay in its own spark.newSession().
+# The relational part of the analyst_serving deck
+# (perfbench/workloads.py:SERVING_QUERIES without the ANN/BM25 four).
+_SERVING_RELATIONAL = [
+    "q01_pricing_summary", "q05_multiagg_conditional", "q09_distinct_count",
+    "q12_star_join", "q13_semi_join", "q17_top10_revenue", "q22_window_yoy",
+    "q23_topk_per_group", "q106_nation_year_profit", "q107_custdist",
+    "q115_volume_shipping", "q124_forecast_revenue", "q125_returned_customers",
+    "q40_tumbling_window", "q42_session_window", "q46_asof_join",
+    "q48_range_lookback", "q49f_funnel", "q164_ohlc_bars",
+]
+
 _CONF_SET_ALLOWED = {
     ("queries/event_queries.py", "q277_stream_totals_tws"),
     ("queries/event_queries.py", "q49c_stream_dedup"),
@@ -46,6 +60,30 @@ def test_q57_never_changes_the_sessions_shuffle_partitions(spark):
         done.set()
         poller.join(timeout=30)
     assert seen == {own}, f"a concurrent reader saw {key} = {sorted(seen)}"
+
+
+def test_a_warm_serving_deck_reuses_its_generated_classes(spark):
+    """Spark's generated-class cache holds 100 classes by default, and
+    these 19 queries use more than that, so at 100 entries each pass
+    evicts every class before its next use: the second pass compiled
+    about 216 classes. With the cache sized in ``get_spark`` it
+    compiles 0-4; the occasional 4 came from q09_distinct_count's
+    distinct aggregate, once in four repeat passes. The first pass is
+    not counted: earlier tests in the session may have compiled these
+    classes already."""
+    from ecowatt_etl_spark.queries.registry import all_queries
+
+    qs = all_queries()
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def deck() -> None:
+        for name in _SERVING_RELATIONAL:
+            qs[name].fn(spark, SF_SMOKE).collect()
+
+    deck()
+    before = compiles.getCount()
+    deck()
+    assert compiles.getCount() - before <= 10
 
 
 def test_package_has_no_cache_keyed_on_the_id_of_a_session():
