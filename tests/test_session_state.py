@@ -20,9 +20,6 @@ from tests.conftest import SF_SMOKE
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "ecowatt_etl_spark"
 
-# The streaming replays' RocksDB provider choice is still set and
-# restored per run. ROADMAP direction 4 removes these two sites by
-# building each replay in its own spark.newSession().
 # The relational part of the analyst_serving deck
 # (perfbench/workloads.py:SERVING_QUERIES without the ANN/BM25 four).
 _SERVING_RELATIONAL = [
@@ -34,6 +31,9 @@ _SERVING_RELATIONAL = [
     "q48_range_lookback", "q49f_funnel", "q164_ohlc_bars",
 ]
 
+# The streaming replays' RocksDB provider choice is still set and
+# restored per run. ROADMAP direction 4 removes these two sites by
+# building each replay in its own spark.newSession().
 _CONF_SET_ALLOWED = {
     ("queries/event_queries.py", "q277_stream_totals_tws"),
     ("queries/event_queries.py", "q49c_stream_dedup"),
