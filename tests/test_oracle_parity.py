@@ -15,6 +15,11 @@ fetchdf) before stringification, because that is the dtype path the
 driver hashes through. The previous fetchall() comparison converted
 DuckDB HUGEINT to exact int and so passed q176 while the driver
 failed it ("500" vs "500.0"); this harness now sees that class.
+
+Each oracle runs with its CTEs marked MATERIALIZED
+(``tools/parity_sweep.materialize_ctes``): the same rows, but DuckDB
+evaluates each CTE once instead of once per reference, which took the
+near-dup oracles from minutes to seconds.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ import pytest
 
 from tests.conftest import SF_ORACLE
 from tools.parity_sweep import eq as _values_equal
+from tools.parity_sweep import materialize_ctes
 from tools.parity_sweep import norm as _normalize
 from tools.parity_sweep import pdf_rows
 
@@ -43,7 +49,7 @@ def test_query_matches_oracle(spark, duck, spec):
         return
 
     spark_rows = pdf_rows(sdf.toPandas())
-    res = duck.execute(spec.oracle)
+    res = duck.execute(materialize_ctes(spec.oracle))
     duck_cols = [d[0] for d in res.description]
     duck_rows = pdf_rows(res.fetchdf())
 
@@ -68,3 +74,34 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+def test_materialize_ctes_marks_only_cte_definitions():
+    sql = (
+        "WITH RECURSIVE a AS (SELECT 1 AS x), b AS (\n  WITH c AS (FROM a) SELECT * FROM c),\n"
+        "d(y) AS (SELECT x FROM b)\n"
+        "SELECT CAST(x AS DOUBLE) AS v, sum(x) OVER w FROM b, d WINDOW w AS (ORDER BY x)"
+    )
+    assert materialize_ctes(sql) == (
+        "WITH RECURSIVE a AS MATERIALIZED (SELECT 1 AS x), b AS MATERIALIZED (\n"
+        "  WITH c AS MATERIALIZED (FROM a) SELECT * FROM c),\n"
+        "d(y) AS (SELECT x FROM b)\n"
+        "SELECT CAST(x AS DOUBLE) AS v, sum(x) OVER w FROM b, d WINDOW w AS (ORDER BY x)"
+    )
+
+
+@pytest.mark.parametrize(
+    "name", ["q100_curation_e2e", "q102_mixture_resample", "q114_min_cost_supplier"]
+)
+def test_materialized_oracle_returns_the_same_rows(duck, name):
+    from ecowatt_etl_spark.queries.registry import all_queries
+
+    oracle = all_queries()[name].oracle
+    assert materialize_ctes(oracle) != oracle
+
+    def rows(sql):
+        res = duck.execute(sql)
+        cols = [d[0] for d in res.description]
+        return cols, _normalize(pdf_rows(res.fetchdf()), cols)
+
+    assert rows(materialize_ctes(oracle)) == rows(oracle)
