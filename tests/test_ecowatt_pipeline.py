@@ -9,6 +9,7 @@ reference rounds fact floats to 6 dp, main.py:338-340).
 from __future__ import annotations
 
 import csv
+import os
 
 import pytest
 
@@ -18,6 +19,11 @@ GOLDEN_DIR = "/root/reference/extracted"
 
 @pytest.fixture(scope="module")
 def star(spark):
+    # The reference's raw CSVs and golden star are not in the repository;
+    # every test on this fixture compares against them.
+    for path in (DATA_DIR, GOLDEN_DIR):
+        if not os.path.isdir(path):
+            pytest.skip(f"reference data absent: {path} is not a directory")
     from ecowatt_etl_spark.plans.ecowatt_pipeline import run_pipeline
 
     return run_pipeline(spark, DATA_DIR)
