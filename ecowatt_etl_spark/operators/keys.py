@@ -19,18 +19,20 @@ preference by table size:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
 def add_surrogate_key(
-    df: DataFrame, name: str, order_by: list[str], offset: int = 0
+    df: DataFrame, name: str, order_by: list[str], offset: int | Column = 0
 ) -> DataFrame:
     """Contiguous 1-based ids in a deterministic global order.
 
     ``offset`` reproduces the reference's second-batch id offset
-    (main.py:288-291: 2022 fact ids start at len(df_2023)+1).
+    (main.py:288-291: 2022 fact ids start at len(df_2023)+1). A Column
+    offset (e.g. a window count over the frame) is evaluated per row
+    in the same pass, so the offset needs no action of its own.
     """
     w = W.orderBy(*[F.col(c) for c in order_by])
     key = F.row_number().over(w) + F.lit(offset)

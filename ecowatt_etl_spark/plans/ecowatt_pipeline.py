@@ -3,10 +3,18 @@
 Reference lifecycle (reference main.py:371-437): extract 3 CSVs →
 3 independent pandas transform branches → 2 full-outer conformance
 merges → star-schema modeling (4 dims + 2 facts) → load. Every stage
-there materializes an eager frame; here the whole pipeline is ONE lazy
-DAG per sink action — Catalyst fuses the 20+ intermediate projections,
-prunes unused columns at the scans, and evaluates the three branches
-independently.
+there materializes an eager frame. Here extract → transform → merge is
+one lazy DAG: Catalyst fuses the 20+ intermediate projections, prunes
+unused columns at the scans, and evaluates the three branches
+independently. ``run_pipeline`` runs the plan guard on that DAG before
+any of it executes, then materialises the conformed per-suburb frame
+once (``localCheckpoint``). The suburb dimension and both facts are
+lazy plans over those rows, so ``write_star_schema``'s six concurrent
+writes neither re-plan nor re-scan the CSVs; only the vehicle-type
+dimension scans the EV CSV again, because the reference takes vehicle
+types from the unfiltered EV frame, which the conformed frame does not
+carry. The suburb-grained frame is tiny next to its inputs, which is
+what makes holding it in executor storage safe at any input size.
 
 Semantic parity notes (pandas → Spark):
   - to_numeric(errors='coerce') NaN  → try_cast NULL (F4)
@@ -22,6 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ecowatt_etl_spark.functions.cleaning import (
@@ -246,12 +255,14 @@ def build_facts(
     then-scrubbed semantics; synthesized 2022 rows use the guarded
     ratios (safe_ev_per_energy / safe_no2_per_ev, main.py:304-331) —
     there a row-wise Python .apply, here codegen'd `when` chains. Ids
-    follow sorted-suburb order, 2022 block offset by n (main.py:288).
+    follow sorted-suburb order, 2022 block offset by n = len(final_df)
+    (main.py:288): a window count in the same single-partition pass
+    that numbers the ids, not a separate action.
     """
-    n_rows = final_df.count()  # reference: len(final_df) for the id offset
-    with_keys = final_df.join(
+    counted = final_df.withColumn("_N_ROWS", F.count(F.lit(1)).over(W.partitionBy()))
+    with_keys = counted.join(
         F.broadcast(dim_suburb),
-        final_df.SUBURB == dim_suburb.SUBURB_NAME,
+        counted.SUBURB == dim_suburb.SUBURB_NAME,
         "left",
     )
 
@@ -281,7 +292,7 @@ def build_facts(
     )
 
     energy_2022 = add_surrogate_key(
-        with_keys, "fact_energy_pollution_id", ["SUBURB"], offset=n_rows
+        with_keys, "fact_energy_pollution_id", ["SUBURB"], offset=F.col("_N_ROWS")
     ).select(
         "fact_energy_pollution_id",
         "id_suburb",
@@ -308,7 +319,18 @@ def build_facts(
 # end-to-end
 # ---------------------------------------------------------------------------
 def run_pipeline(spark: SparkSession, data_dir: str) -> StarSchema:
-    """extract → transform ×3 → merge → model, one lazy DAG."""
+    """extract → transform ×3 → merge → model.
+
+    The plan guard (plans/guard.py) checks the conformed frame's whole
+    DAG before any Spark job runs, so a banned shape upstream (a
+    cartesian merge, a row-wise Python UDF in a transform) fails here
+    without touching the data. The frame is then materialised once
+    (``localCheckpoint``: one pass over the CSVs, rows held in executor
+    storage and released when the returned frames are garbage
+    collected); the suburb dimension and the facts are lazy plans over
+    it."""
+    from ecowatt_etl_spark.plans.guard import assert_scalable
+
     ev_raw = read_ev_population(spark, f"{data_dir}/Ev_Population.csv")
     elec_raw = read_electricity(spark, f"{data_dir}/Electricity_Consumption.csv")
     poll_raw = read_pollution(spark, f"{data_dir}/Pollution_Index.csv")
@@ -316,6 +338,7 @@ def run_pipeline(spark: SparkSession, data_dir: str) -> StarSchema:
     final_df = merge_datasets(
         transform_ev(ev_raw), transform_electricity(elec_raw), transform_pollution(poll_raw)
     )
+    final_df = assert_scalable(final_df).localCheckpoint()
     dim_time, dim_suburb, dim_vehicle, dim_fuel = build_dimensions(spark, final_df, ev_raw)
     ev_fact, energy_fact = build_facts(final_df, dim_suburb)
     return StarSchema(dim_time, dim_suburb, dim_vehicle, dim_fuel, ev_fact, energy_fact)
@@ -334,6 +357,13 @@ def write_star_schema(
     (SURVEY §4) — dims unpartitioned. CSV sink supported for parity;
     Parquet is the engine contract.
 
+    ``plan_gate`` runs plans/guard.py admission control on every table
+    BEFORE any write starts: a transform edit that silently turns a
+    dimension join cartesian or introduces a row-wise Python UDF fails
+    the load at submit time, not as a cluster incident. The star frames
+    carry no waivers — every join in this pipeline is broadcast/equi by
+    design, so any banned shape is a regression.
+
     ``quality_gate`` attaches ``observe()`` metrics to each fact write
     (operators/quality.py) — the metrics ride the write job itself (no
     validation re-scan) and the load REFUSES to pass silently if a fact
@@ -342,20 +372,26 @@ def write_star_schema(
     (main.py:392-433), turned from console output into a hard gate.
     Returns per-table collected metrics for caller-side audit logs.
 
-    ``plan_gate`` additionally runs plans/guard.py admission control on
-    every table BEFORE any write starts: a transform edit that silently
-    turns a dimension join cartesian or introduces a row-wise Python
-    UDF fails the load at submit time, not as a cluster incident. The
-    star frames carry no waivers — every join in this pipeline is
-    broadcast/equi by design, so any banned shape is a regression."""
+    After the plan gate the six writes run concurrently, one thread per
+    table, so one table's planning and code generation on the driver
+    overlaps another's tasks. Each thread carries the caller's Spark
+    job group, local properties and session tags, so the write jobs
+    are attributed (and cancellable) as the caller's. Every write is
+    waited for; then the first failure in table order — a failed write
+    or a failed quality expectation — is raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
     from ecowatt_etl_spark.operators.quality import expect, observe_quality
     from ecowatt_etl_spark.plans.guard import assert_scalable
 
+    tables = star.tables()
     if plan_gate:
-        for df in star.tables().values():
+        for df in tables.values():
             assert_scalable(df)
-    collected: dict[str, dict[str, object]] = {}
-    for name, df in star.tables().items():
+
+    def write(name: str, df: DataFrame) -> dict[str, object] | None:
         obs = None
         if quality_gate and name.startswith("fact_"):
             df, obs = observe_quality(
@@ -368,12 +404,24 @@ def write_star_schema(
             writer.options(header=True).csv(f"{out_dir}/{name}")
         else:
             writer.parquet(f"{out_dir}/{name}")
-        if obs is not None:
-            collected[name] = expect(
-                obs,
-                n_rows=lambda v: v > 0,
-                n_null_id_suburb=lambda v: v == 0,
-            )
+        if obs is None:
+            return None
+        return expect(obs, n_rows=lambda v: v > 0, n_null_id_suburb=lambda v: v == 0)
+
+    spark = star.dim_time.sparkSession
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        # wrapped once per table: each thread gets its own copy of the
+        # caller's local properties, where Spark also keeps the running
+        # SQL execution id
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        }
+    collected: dict[str, dict[str, object]] = {}
+    for name, future in futures.items():
+        metrics = future.result()
+        if metrics is not None:
+            collected[name] = metrics
     return collected
 
 

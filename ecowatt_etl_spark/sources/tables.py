@@ -17,6 +17,7 @@ import weakref
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ecowatt_etl_spark.cache import ArtifactCache
 
@@ -107,6 +108,20 @@ def file_memo(path: str, tag: tuple, build: Callable[[], V]) -> V:
     return _FILE_MEMO.get((tag, version), build)
 
 
+def inferred_schema(spark: SparkSession, path: str, glob: str | None = None) -> StructType:
+    """The parquet schema Spark infers for ``path`` (a Spark job), read
+    only from the files matching ``glob`` when given; memoised by
+    ``file_memo`` per version of ``path`` and per the confs inference
+    reads (``_INFER_CONFS``), so a warm call launches no job and a
+    rewritten file is inferred again."""
+    def infer() -> StructType:
+        reader = spark.read if glob is None else spark.read.option("pathGlobFilter", glob)
+        return reader.parquet(path).schema
+
+    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
+    return file_memo(path, ("schema", glob, confs), infer)
+
+
 def pin_timestamp_confs(spark: SparkSession) -> None:
     """Enable nanosAsLong and pin the session zone to UTC, once per
     session: the side effect load_table documents, shared by the
@@ -174,11 +189,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ts_cols:
         pin_timestamp_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    confs = tuple(spark.conf.get(k) for k in _INFER_CONFS)
-    schema = file_memo(
-        path, ("schema", confs), lambda: spark.read.parquet(path).schema
-    )
-    df = spark.read.schema(schema).parquet(path)
+    df = spark.read.schema(inferred_schema(spark, path)).parquet(path)
     for col in ts_cols:
         if col not in df.columns:  # partial-schema fixtures (tests)
             continue

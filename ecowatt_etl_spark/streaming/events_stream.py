@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ecowatt_etl_spark.sources.tables import pin_timestamp_confs
+from ecowatt_etl_spark.sources.tables import inferred_schema, pin_timestamp_confs
 
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
@@ -78,12 +78,7 @@ def read_events_stream(
             f"{sorted(shapes)} — normalize the producer or split the replay; "
             "one stream-wide normalization branch cannot serve both"
         )
-    ts_type = (
-        spark.read.option("pathGlobFilter", glob)
-        .parquet(sf_dir)
-        .schema["ts"]
-        .dataType
-    )
+    ts_type = inferred_schema(spark, sf_dir, glob)["ts"].dataType
     reader = spark.readStream.schema(_events_schema(ts_type)).option(
         "pathGlobFilter", glob
     )

@@ -12,53 +12,15 @@ from __future__ import annotations
 
 import sys
 import threading
-import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from tests.conftest import count_jobs, jobs_in_group, set_job_group
+
 SF = "/root/testdata/sf0.01"
-
-
-def _set_group(spark, group: str | None) -> None:
-    sc = spark.sparkContext
-    if group is None:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    else:
-        sc.setJobGroup(group, group)
-
-
-def _count_jobs(spark, groups: list[str]) -> int:
-    """Spark jobs started so far under ``groups``. A sentinel job in a
-    group of its own, run after them, marks the end: the status store
-    records job starts in order, so once the sentinel is visible every
-    job started before it is too."""
-    mark = f"sentinel-{uuid.uuid4().hex}"
-    _set_group(spark, mark)
-    try:
-        spark.sparkContext.parallelize([0], 1).count()
-    finally:
-        _set_group(spark, None)
-    tracker = spark.sparkContext.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(mark):
-        assert time.monotonic() < deadline, "sentinel job never reached the status store"
-        time.sleep(0.05)
-    return sum(len(tracker.getJobIdsForGroup(g)) for g in groups)
-
-
-def _jobs_in_group(spark, fn):
-    """(fn's result, number of Spark jobs fn launched on this thread)."""
-    group = f"probe-{uuid.uuid4().hex}"
-    _set_group(spark, group)
-    try:
-        out = fn()
-    finally:
-        _set_group(spark, None)
-    return out, _count_jobs(spark, [group])
 
 
 def _write_region(path, rows, extra_col: bool = False) -> None:
@@ -101,9 +63,9 @@ def test_second_load_of_one_file_launches_no_job(spark, tmp_path):
     from ecowatt_etl_spark.sources.tables import load_table
 
     _write_region(tmp_path / "region.parquet", [(0, "AFRICA")])
-    _, cold = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    _, cold = jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
     assert cold >= 1  # schema inference is a job: the check below can see one
-    df, warm = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
+    df, warm = jobs_in_group(spark, lambda: load_table(spark, str(tmp_path), "region"))
     assert warm == 0
     assert df.columns == ["r_regionkey", "r_name"]
 
@@ -117,7 +79,7 @@ def test_warm_query_build_launches_no_job(spark, name):
 
     fn = all_queries()[name].fn
     fn(spark, SF)  # warm: schemas, corpus statistics and artifacts resolved
-    df, jobs = _jobs_in_group(spark, lambda: fn(spark, SF))
+    df, jobs = jobs_in_group(spark, lambda: fn(spark, SF))
     assert jobs == 0, f"{name}: a warm plan build launched {jobs} Spark job(s)"
     assert df.columns
 
@@ -146,7 +108,7 @@ def test_concurrent_first_calls_resolve_schema_once(spark, tmp_path):
     (tmp_path / "hot").mkdir()
     _write_region(tmp_path / "ref" / "region.parquet", [(0, "AFRICA")])
     _write_region(tmp_path / "hot" / "region.parquet", [(0, "AFRICA")])
-    _, one = _jobs_in_group(spark, lambda: load_table(spark, str(tmp_path / "ref"), "region"))
+    _, one = jobs_in_group(spark, lambda: load_table(spark, str(tmp_path / "ref"), "region"))
     assert one >= 1
 
     tag = uuid.uuid4().hex
@@ -155,7 +117,7 @@ def test_concurrent_first_calls_resolve_schema_once(spark, tmp_path):
     errors: list[Exception] = []
 
     def first_call(group: str) -> None:
-        _set_group(spark, group)
+        set_job_group(spark, group)
         try:
             start.wait(timeout=30)
             load_table(spark, str(tmp_path / "hot"), "region")
@@ -174,4 +136,4 @@ def test_concurrent_first_calls_resolve_schema_once(spark, tmp_path):
         sys.setswitchinterval(switch)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    assert _count_jobs(spark, groups) == one
+    assert count_jobs(spark, groups) == one

@@ -122,3 +122,29 @@ def test_stream_reader_refuses_mixed_shape_replay_dir(spark, tmp_path):
     _write_events(str(tmp_path / "events-1.parquet"), _SHAPES["ntz_micros"])
     with pytest.raises(ValueError, match="mixed ts physical shapes"):
         read_events_stream(spark, str(tmp_path), glob="events-*.parquet")
+
+
+def test_stream_reader_memoises_ts_inference_per_file_version(spark, tmp_path):
+    """A warm read_events_stream launches no Spark job; a replay file
+    rewritten in place with another ts shape is inferred again, not
+    served the old shape's normalization."""
+    from ecowatt_etl_spark.streaming.events_stream import read_events_stream, run_to_completion
+    from tests.conftest import jobs_in_group
+
+    path = str(tmp_path / "events.parquet")
+    _write_events(path, _SHAPES["nanos"])
+    _, cold = jobs_in_group(spark, lambda: read_events_stream(spark, str(tmp_path)))
+    assert cold >= 1  # inference is a job: the check below can see one
+    _, warm = jobs_in_group(spark, lambda: read_events_stream(spark, str(tmp_path)))
+    assert warm == 0
+
+    _write_events(path, _SHAPES["ntz_micros"])
+    stream = read_events_stream(spark, str(tmp_path)).selectExpr(
+        "date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSS') AS s"
+    )
+    got = sorted(r[0] for r in run_to_completion(stream, "ts_memo_rewrite").collect())
+    assert got == [
+        "2024-03-01 12:00:01.500",
+        "2024-03-01 12:30:02.250",
+        "2024-03-02 08:15:03.000",
+    ]
