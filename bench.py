@@ -5,7 +5,12 @@ Prints exactly ONE JSON line:
 
 Each query is timed end-to-end (plan → execute → collect); results are
 small aggregates so collect cost is negligible. Session build time is
-excluded (the driver measures engine throughput, not JVM start).
+excluded (the driver measures engine throughput, not JVM start). The
+registry keeps each query's prepared plan (queries/registry.py), so a
+query whose build is pure is built on its first rep only: the median of
+three includes plan-cache hits, which execute in full but skip building
+the plan. Compare against runs made before the plan cache with that in
+mind.
 """
 
 from __future__ import annotations

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import threading
 import weakref
-from typing import Callable, TypeVar
+from typing import Callable, NamedTuple, TypeVar
 
 V = TypeVar("V")
 _MISSING = object()
@@ -16,11 +16,20 @@ _MISSING = object()
 SESSION_CACHES: weakref.WeakSet = weakref.WeakSet()
 
 
+class Unstored(NamedTuple):
+    """What a build returns to hand ``value`` to its caller without
+    storing it: the next call builds again."""
+
+    value: object
+
+
 class ArtifactCache:
     """``get(key, build)`` returns the value stored under ``key``, calling
     ``build()`` on the first call. Concurrent first calls for one key
     build once: the others wait on that key's lock, while other keys
-    build in parallel. A build that raises stores nothing."""
+    build in parallel. A build that raises stores nothing, and neither
+    does one that returns ``Unstored(value)``. With ``fresh``, a stored
+    value for which ``fresh(value)`` is false is dropped and rebuilt."""
 
     def __init__(self, session_artifacts: bool = True):
         self._values: dict = {}
@@ -29,15 +38,22 @@ class ArtifactCache:
         if session_artifacts:
             SESSION_CACHES.add(self)
 
-    def get(self, key, build: Callable[[], V]) -> V:
+    def get(self, key, build: Callable[[], V], fresh: Callable[[V], bool] | None = None) -> V:
+        def usable(value) -> bool:
+            return value is not _MISSING and (fresh is None or fresh(value))
+
         value = self._values.get(key, _MISSING)
-        if value is _MISSING:
+        if not usable(value):
             with self._guard:
                 lock = self._locks.setdefault(key, threading.Lock())
             with lock:
                 value = self._values.get(key, _MISSING)
-                if value is _MISSING:
-                    value = self._values[key] = build()
+                if not usable(value):
+                    self._values.pop(key, None)
+                    value = build()
+                    if isinstance(value, Unstored):
+                        return value.value
+                    self._values[key] = value
         return value
 
     def __delitem__(self, key) -> None:

@@ -216,6 +216,17 @@ class StarSchema:
         }
 
 
+def _literal_table(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A literal table planned in the JVM: an inline generator over a
+    one-row scan. ``createDataFrame`` would make it a pickled Python RDD
+    that the plan guard cannot read into and that starts Python workers
+    to write two rows. The cast gives the columns ``ddl``'s names, types
+    and nullability, so the written parquet schema is the one
+    ``createDataFrame`` wrote."""
+    structs = F.array(*(F.struct(*map(F.lit, row)) for row in rows))
+    return spark.sql("SELECT 1").select(F.inline(structs.cast(f"array<struct<{ddl}>>")))
+
+
 def build_dimensions(
     spark: SparkSession, final_df: DataFrame, ev_raw: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -223,7 +234,8 @@ def build_dimensions(
     two literal dims, suburb ids in sorted order (pandas outer merge
     sorts its key — row_number over SUBURB reproduces the golden ids),
     vehicle types from the RAW (unfiltered) EV frame."""
-    dim_time = spark.createDataFrame(
+    dim_time = _literal_table(
+        spark,
         [(2022, 2022, False), (2023, 2023, True)],
         "id_time long, YEAR long, IS_CURRENT_YEAR boolean",
     )
@@ -235,7 +247,8 @@ def build_dimensions(
         "id_vehicle_type",
         ["VEHICLE_TYPE"],
     ).select("id_vehicle_type", "VEHICLE_TYPE")
-    dim_fuel = spark.createDataFrame(
+    dim_fuel = _literal_table(
+        spark,
         [
             (1, "BEV", "Battery Electric Vehicle"),
             (2, "PHEV", "Plug-in Hybrid Electric Vehicle"),

@@ -5,14 +5,44 @@ beyond-reference pipeline operators) registers here as a callable
 ``(spark, sf_dir) -> DataFrame`` plus, when the semantics are
 ANSI-SQL-expressible, a DuckDB oracle string over the same parquet
 tables. ``__spark_entry__.py`` is a thin view over this registry.
+
+Prepared plans: ``QuerySpec.fn`` runs the registered function once per
+(session, query name, ``sf_dir``, input versions, SQL conf) and keeps
+the DataFrame it built. Later calls return a new root over that
+analyzed plan, which Spark then optimizes, plans and executes afresh:
+this is a plan cache, never a result cache, so no two calls share a
+QueryExecution, shuffle, broadcast or adaptive stage, and the kept
+DataFrame itself is never executed. Each call's result has its own
+output attribute ids, so two results join like two independent scans.
+The input versions are ``sources.tables._file_version`` of ``sf_dir``
+and of every file-scan root outside it, and the conf is a hash of every
+SQL conf set on the session; when any of them differs from build time,
+the plan is built again.
+
+Impure builds are never kept: a build that launched a Spark job (an
+index build, a keyed write, a streaming replay), returned a streaming
+DataFrame, changed the conf or ``sf_dir`` while it ran, or reads
+anything but local Hadoop file scans, checkpoints, driver-local data
+and literal relations (JDBC, Python data sources, memory sinks) is
+returned as built, and its next call runs the function again.
+``session.evict_session_artifacts`` drops every kept plan. The
+``query`` decorator returns the function itself, so module-level calls
+bypass the cache.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
+
+from ecowatt_etl_spark.cache import ArtifactCache, Unstored
+from ecowatt_etl_spark.sources.tables import _file_version
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -34,10 +64,148 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(name, fn, oracle, (fn.__doc__ or "").strip())
+        _REGISTRY[name] = QuerySpec(name, prepared(name, fn), oracle, (fn.__doc__ or "").strip())
         return fn
 
     return deco
+
+
+# kept plans, keyed (session, query name, sf_dir); a session artifact
+_PLANS = ArtifactCache()
+# analyzed-plan leaves that hold everything they produce
+_LITERAL_LEAVES = frozenset(
+    f"org.apache.spark.sql.catalyst.plans.logical.{n}"
+    for n in ("LocalRelation", "Range", "OneRowRelation", "CTERelationRef", "UnionLoopRef")
+)
+_LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
+_FILE_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_HADOOP_FS = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+# the RDD of driver-local data (sc.parallelize, Python createDataFrame)
+_LOCAL_DATA_RDD = "org.apache.spark.rdd.ParallelCollectionRDD"
+
+
+@dataclass(frozen=True)
+class _Plan:
+    """A pure build: the DataFrame the query function returned (analyzed,
+    never executed) and the state it was analyzed under."""
+
+    df: DataFrame
+    names: object  # the output column names as a JVM Seq
+    conf: int
+    inputs: tuple
+    roots: tuple  # (path, version) of every file-scan root outside sf_dir
+
+    def new_root(self) -> DataFrame:
+        # toDF aliases every output column, so each call gets a root node
+        # of its own (Spark tags a Dataset's root with a mutable id set)
+        # and fresh attribute ids. Passing the names as one JVM Seq saves
+        # a py4j round trip per column.
+        return type(self.df)(self.df._jdf.toDF(self.names), self.df.sparkSession)
+
+
+def _conf_version(spark: SparkSession) -> int:
+    """Fingerprint of every SQL conf set on the session, in one JVM call
+    (``spark.conf.getAll`` costs about 19 ms)."""
+    return spark._jsparkSession.sessionState().conf().getAllConfs().hashCode()
+
+
+def _launched_jobs(spark: SparkSession, tag: str) -> bool:
+    """Whether any Spark job carried ``tag``, once the status store has
+    seen every event posted so far."""
+    jsc = spark.sparkContext._jsc.sc()
+    try:
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # the bus did not drain in time: assume a job ran
+        return True
+    return len(jsc.statusTracker().getJobIdsForTag(tag)) > 0
+
+
+def _local_rdd(rdd) -> bool:
+    """Whether an RDD's lineage ends only in checkpoints and driver-local data."""
+    if rdd.isCheckpointed():
+        return True
+    deps = rdd.dependencies()
+    if deps.isEmpty():
+        return rdd.getClass().getName() == _LOCAL_DATA_RDD
+    return all(_local_rdd(deps.apply(i).rdd()) for i in range(deps.size()))
+
+
+def _scan_roots(plan) -> list[str] | None:
+    """Local paths of every file scan in an analyzed plan and its
+    subqueries; None when a leaf is anything but a local Hadoop file
+    scan, a checkpoint, driver-local data or a literal relation."""
+    subqueries = plan.subqueriesAll()
+    roots: list[str] = []
+    for p in [plan, *(subqueries.apply(i) for i in range(subqueries.size()))]:
+        leaves = p.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getName()
+            if kind in _LITERAL_LEAVES or (kind == _LOGICAL_RDD and _local_rdd(leaf.rdd())):
+                continue
+            if kind != _FILE_RELATION or leaf.relation().getClass().getName() != _HADOOP_FS:
+                return None
+            paths = leaf.relation().location().rootPaths()
+            for j in range(paths.size()):
+                uri = paths.apply(j).toUri()
+                if uri.getScheme() not in (None, "file"):
+                    return None
+                roots.append(uri.getPath())
+    return roots
+
+
+def _build(spark: SparkSession, sf_dir: str, fn: QueryFn, conf: int, inputs: tuple):
+    """``fn(spark, sf_dir)`` as a ``_Plan`` when the build was pure,
+    else wrapped in ``Unstored``."""
+    sc = spark.sparkContext
+    tag = f"ecowatt-plan-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.removeJobTag(tag)
+    if (
+        df.isStreaming
+        or _conf_version(spark) != conf
+        or _file_version(sf_dir) != inputs
+        or _launched_jobs(spark, tag)
+    ):
+        return Unstored(df)
+    roots = _scan_roots(df._jdf.queryExecution().analyzed())
+    if roots is None:
+        return Unstored(df)
+    inside = os.path.join(os.path.abspath(sf_dir), "")
+    outside = tuple(
+        (r, _file_version(r)) for r in sorted(set(roots)) if not r.startswith(inside)
+    )
+    if any(version is None for _, version in outside):
+        return Unstored(df)
+    return _Plan(df, df._jseq(df.columns), conf, inputs, outside)
+
+
+def prepared(name: str, fn: QueryFn) -> QueryFn:
+    """``fn`` behind the plan cache the module docstring describes."""
+
+    @functools.wraps(fn)
+    def call(spark: SparkSession, sf_dir: str) -> DataFrame:
+        inputs = _file_version(sf_dir)
+        if inputs is None or not hasattr(spark, "_jsparkSession"):
+            return fn(spark, sf_dir)  # unversioned input or a Connect session
+        conf = _conf_version(spark)
+
+        def fresh(plan: _Plan) -> bool:
+            return (
+                plan.conf == conf
+                and plan.inputs == inputs
+                and all(_file_version(path) == v for path, v in plan.roots)
+            )
+
+        got = _PLANS.get(
+            (spark, name, sf_dir), lambda: _build(spark, sf_dir, fn, conf, inputs), fresh
+        )
+        return got.new_root() if isinstance(got, _Plan) else got
+
+    return call
 
 
 def _load_all() -> None:

@@ -149,7 +149,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rewritten in place gets a new key and is inferred again, never
     served stale. Only the schema is memoised: every call returns a
     FRESH relation with its own attribute ids, so two loads of one
-    table self-join like two independent scans.
+    table self-join like two independent scans. Registry results keep
+    that property: a call answered from a prepared plan
+    (``queries/registry.py``) returns a new root that re-aliases every
+    output column, so two results of one query join like two
+    independent scans too.
 
     Timestamp normalization — the synthetic warehouse has been written
     by several parquet producers across driver rounds, so ``events.ts``

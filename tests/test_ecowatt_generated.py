@@ -71,6 +71,42 @@ def test_star_matches_duckdb_on_generated_csvs(spark, tmp_path, seed):
     assert pipeline_jobs + write_jobs <= MAX_LOAD_JOBS
 
 
+def test_star_plans_scan_no_python_rdd(spark, tmp_path):
+    """The literal dimensions are planned in the JVM: the only RDD any
+    star table scans is the conformed frame's checkpoint, never a
+    pickled Python RDD, and the two literal tables write the parquet
+    schema ``createDataFrame`` wrote (nullable columns)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from ecowatt_etl_spark.plans.ecowatt_pipeline import run_pipeline
+    from ecowatt_etl_spark.plans.guard import physical_plan
+
+    csv_dir = str(tmp_path / "csv")
+    gen.write_etl_csvs(csv_dir, 1, 500, 20)
+    star = run_pipeline(spark, csv_dir)
+    for name, df in star.tables().items():
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                assert leaf.rdd().isCheckpointed(), f"{name} scans a Python RDD"
+
+    ddl = {
+        "dim_time": "id_time long, YEAR long, IS_CURRENT_YEAR boolean",
+        "dim_fuel_type": "id_fuel_type long, FUEL_TYPE string, FUEL_DESCRIPTION string",
+    }
+    for name, schema in ddl.items():
+        df = star.tables()[name]
+        assert "ExistingRDD" not in physical_plan(df), name
+        written = {}
+        for kind, frame in (("jvm", df), ("rows", spark.createDataFrame(df.collect(), schema))):
+            frame.write.parquet(str(tmp_path / name / kind))
+            written[kind] = pq.read_schema(glob.glob(str(tmp_path / name / kind / "*.parquet"))[0])
+        assert written["jvm"].equals(written["rows"], check_metadata=True), name
+
+
 def test_plan_guard_runs_before_any_job(spark, tmp_path, monkeypatch):
     """A banned shape upstream of the conformed frame fails run_pipeline
     before a single Spark job has touched the data."""

@@ -135,7 +135,10 @@ def _const_part(mod_name: str, name: str, val) -> str | None:
 
 def _closure_parts(fn, parts: dict[str, str], seen: set[int]) -> None:
     """Collect normalized sources for fn and every package function /
-    class / simple constant reachable through its globals."""
+    class / simple constant reachable through its globals. A wrapper
+    made with ``functools.wraps`` (the registry's plan cache) stands
+    for the function it wraps."""
+    fn = inspect.unwrap(fn)
     if id(fn) in seen:
         return
     seen.add(id(fn))
