@@ -255,8 +255,7 @@ def main() -> None:
                     # verdict item 3): the headline loop already built
                     # the session artifacts, so these best-of-2 reruns
                     # time the pure serve path a regression would hit.
-                    # Full build/serve/recall per decade:
-                    # tools/ann_decompose.py + SCALE.md.
+                    # Full build/serve/recall per decade: SCALE.md.
                     "q65_warm_serve_s": _warm_serve(
                         spark, specs, sf_dir, "q65_ivf_topk"
                     ),

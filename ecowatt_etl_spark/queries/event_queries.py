@@ -1419,7 +1419,7 @@ def q149_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecowatt_etl_spark.operators.bucketing import bucket_token
     from ecowatt_etl_spark.sources.formats import SCRATCH_ROOT
     from ecowatt_etl_spark.sources.upsert import merge_upsert
-    from ecowatt_etl_spark.streaming.events_stream import read_events_stream
+    from ecowatt_etl_spark.streaming.events_stream import read_events_stream, start_untagged
 
     root = f"{SCRATCH_ROOT}/{bucket_token(sf_dir)}/cdc_latest"
     shutil.rmtree(root, ignore_errors=True)
@@ -1440,12 +1440,11 @@ def q149_stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             newer_than=["ts", "event_id"],
         )
 
-    q = (
+    q = start_untagged(
         read_events_stream(spark, sf_dir)
         .writeStream.foreachBatch(apply_batch)
         .option("checkpointLocation", root + "_cp")
         .trigger(availableNow=True)
-        .start()
     )
     q.awaitTermination()
     return spark.read.parquet(root).select(

@@ -20,11 +20,13 @@ SQL conf set on the session; when any of them differs from build time,
 the plan is built again.
 
 Impure builds are never kept: a build that launched a Spark job (an
-index build, a keyed write, a streaming replay), returned a streaming
-DataFrame, changed the conf or ``sf_dir`` while it ran, or reads
-anything but local Hadoop file scans, checkpoints, driver-local data
-and literal relations (JDBC, Python data sources, memory sinks) is
-returned as built, and its next call runs the function again.
+index build, a keyed write) or started a stream (whose jobs run
+without the build's job tag, see ``events_stream.start_untagged``),
+returned a streaming DataFrame, changed the conf or ``sf_dir`` while
+it ran, or reads anything but local Hadoop file scans, checkpoints,
+driver-local data and literal relations (JDBC, Python data sources,
+memory sinks) is returned as built, and its next call runs the
+function again.
 ``session.evict_session_artifacts`` drops every kept plan. The
 ``query`` decorator returns the function itself, so module-level calls
 bypass the cache.
@@ -43,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ecowatt_etl_spark.cache import ArtifactCache, Unstored
 from ecowatt_etl_spark.sources.tables import _file_version
+from ecowatt_etl_spark.streaming.events_stream import BUILD_TAGS
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -159,13 +162,16 @@ def _build(spark: SparkSession, sf_dir: str, fn: QueryFn, conf: int, inputs: tup
     else wrapped in ``Unstored``."""
     sc = spark.sparkContext
     tag = f"ecowatt-plan-build-{uuid.uuid4().hex}"
+    BUILD_TAGS[tag] = False
     sc.addJobTag(tag)
     try:
         df = fn(spark, sf_dir)
     finally:
         sc.removeJobTag(tag)
+        streamed = BUILD_TAGS.pop(tag)
     if (
-        df.isStreaming
+        streamed
+        or df.isStreaming
         or _conf_version(spark) != conf
         or _file_version(sf_dir) != inputs
         or _launched_jobs(spark, tag)

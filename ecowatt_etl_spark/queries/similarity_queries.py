@@ -1364,8 +1364,8 @@ _PQ_ROUNDS = 2
 # a shrinking fraction of the routed candidates as the corpus grows —
 # PQ distortion outranks the true neighbor at a roughly constant RATE
 # per candidate, so recall drifts down silently with scale (measured
-# by tools/ann_decompose.py before the fix: 1.00 at sf0.1, 0.958 at
-# 10x, 0.708 at 100x). The depth therefore scales as
+# by the per-decade ANN decomposition in SCALE.md before the fix: 1.00
+# at sf0.1, 0.958 at 10x, 0.708 at 100x). The depth therefore scales as
 # max(256, N / _PQ_REFINE_DIV): N/20 of the corpus is ~27% of the
 # ~18.6% routed candidates — the same depth/candidate ratio as the
 # measured gate-scale operating point, so the expected recall is

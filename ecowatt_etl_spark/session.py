@@ -8,6 +8,12 @@ semantics are stable and comparable against external oracles, and a
 generated-code class cache large enough to hold every class one session
 generates, so a warm request reuses the classes the last one compiled.
 
+Broadcast pieces (task binaries, Hadoop confs, join builds) are cut to
+512 KiB, below half of the G1 region size of a 2-4 GB heap, so they
+are allocated in the young generation instead of as humongous objects;
+that sets the serving process's peak RSS, not its data. A heap under
+2 GB has 1 MB regions, where they stay humongous.
+
 On a real cluster the same builder is used — only master/memory change
 via spark-submit conf; nothing here hard-codes local mode semantics.
 """
@@ -111,6 +117,25 @@ def get_spark(
         # registry, since the cached classes stay reachable. A static
         # conf: read when the JVM first generates code.
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # Every stage's task binary, every scan's Hadoop conf and every
+        # broadcast join build is a TorrentBroadcast, which serializes
+        # into pieces of spark.broadcast.blockSize (default 4m) and
+        # allocates the first piece in full. G1 puts any object of half
+        # a region or more in humongous regions of the old generation:
+        # a 2-4 GB heap has 2 MB regions, so every 4 MiB first piece
+        # went humongous. In one 17-s analyst_serving window (JFR,
+        # 4 vCPU, 3g heap) they were 6.0 of 7.7 GB of humongous
+        # allocation, caused 48 young GCs and grew the heap to 2.5 GB
+        # for a live set of about 300 MB. A 512 KiB piece plus its
+        # 16-byte header is under half a 2 MB region, so it is
+        # allocated young and dies young: analyst_serving peak RSS
+        # 3328 -> 2607 MB (median of 10 seed pairs, 4 vCPU, lower in all
+        # 10), humongous-triggered GCs per window 50 -> 9 and 49 -> 30
+        # (two seeds). A heap under 2 GB has 1 MB regions, where a
+        # 512 KiB piece is still humongous. The GCs left come from
+        # Spark's fixed 1 MiB task-serialization and collect chunks; a
+        # 4 MB region removed them too but gave no further peak-RSS gain.
+        .config("spark.broadcast.blockSize", "512k")
         # Local mode puts driver and executors in ONE JVM, so
         # spark.driver.memory IS the executor memory: the 1g Spark
         # default starves shuffles/broadcasts/localCheckpoints the
@@ -127,6 +152,15 @@ def get_spark(
         # broadcast them (10 MB default is fine; raised a bit for dims
         # that grow with SF).
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # lower/upper/initcap through the JVM's case mapping, not ICU's:
+        # the first ICU case mapping in a JVM runs ICU's class
+        # initializer (1.14 s against 0.15 s for the first initcap in a
+        # fresh session), and functions/cleaning.title_case puts it on
+        # the cold ETL's critical path. The two differ only outside
+        # ASCII; the star on two generated seeds and the 299 registry
+        # queries that need no reference data (50 with a case mapping
+        # in their plan, run at sf0.01) gave identical rows under both.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         # --- correctness / determinism knobs -----------------------------
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

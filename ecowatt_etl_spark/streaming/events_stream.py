@@ -16,9 +16,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ecowatt_etl_spark.sources.tables import inferred_schema, pin_timestamp_confs
 
@@ -38,6 +40,33 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 
 # kept for import compatibility / docs: the nanos-as-long shape
 EVENTS_SCHEMA = _events_schema(T.LongType())
+
+# job tag of each running registry plan build -> whether a stream was
+# started under it (queries/registry.py keeps such a build unstored)
+BUILD_TAGS: dict[str, bool] = {}
+
+
+def start_untagged(writer: DataStreamWriter) -> StreamingQuery:
+    """``writer.start()`` with the calling thread's Spark job tags
+    cleared, and restored once the query has started.
+
+    A stream started under a job tag posts a ``QueryStartedEvent``
+    carrying that tag, and PySpark 4.1's ``QueryStartedEvent.fromJObject``
+    calls ``toString()`` on tags py4j already turned into ``str``: every
+    Python listener then loses ``onQueryStarted``. The stream's jobs
+    therefore carry none of the caller's tags; a registry build that is
+    running under one learns of the stream through ``BUILD_TAGS``."""
+    sc = SparkContext.getOrCreate()
+    tags = sc.getJobTags()
+    for tag in tags:
+        if tag in BUILD_TAGS:
+            BUILD_TAGS[tag] = True
+    sc.clearJobTags()
+    try:
+        return writer.start()
+    finally:
+        for tag in tags:
+            sc.addJobTag(tag)
 
 
 def read_events_stream(
@@ -270,11 +299,8 @@ def run_to_completion(
     listener = _ProgressLog()
     spark.streams.addListener(listener)
     try:
-        query = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
+        query = start_untagged(
+            agg.writeStream.outputMode(output_mode).format("memory").queryName(name)
         )
         try:
             query.processAllAvailable()
@@ -448,7 +474,7 @@ def stream_rollup_to_parquet(
         )
         if checkpoint is not None:
             writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
+        q = start_untagged(writer)
         try:
             q.processAllAvailable()
         finally:

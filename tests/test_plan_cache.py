@@ -3,18 +3,21 @@
 A named query's plan is built once per (session, input versions, SQL
 conf) and every call executes a new root over it. These tests pin the
 contract: a rewritten input or a changed conf re-plans, a build that
-launches a Spark job or returns a stream is never kept, concurrent
-first calls build once, eviction drops the plans, two results join like
-two independent scans, and a hit launches no job.
+launches a Spark job, starts a stream or returns one is never kept,
+concurrent first calls build once, eviction drops the plans, two
+results join like two independent scans, and a hit launches no job.
+A stream a build starts still reaches Python listeners.
 """
 
 from __future__ import annotations
 
 import threading
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from tests.conftest import SF_SMOKE, jobs_in_group
 
@@ -198,6 +201,89 @@ def test_two_results_self_join_like_two_scans(spark):
     assert len(names) == 25
     # every nation's region key (0..4) is also a nation key
     assert sorted(r["nation"] for r in rows) == sorted(names)
+
+
+class _Runs(StreamingQueryListener):
+    """The (name, run id) of every stream whose start event arrived, and
+    the run ids of every terminated one."""
+
+    def __init__(self) -> None:
+        self.started: list[tuple[str | None, str]] = []
+        self.terminated: set[str] = set()
+
+    def onQueryStarted(self, event) -> None:  # noqa: N802 — Spark API
+        self.started.append((event.name, str(event.runId)))
+
+    def onQueryProgress(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryIdle(self, event) -> None:  # noqa: N802
+        pass
+
+    def onQueryTerminated(self, event) -> None:  # noqa: N802
+        self.terminated.add(str(event.runId))
+
+
+def _stream_runs(spark, call, n: int) -> list[tuple[str | None, str]]:
+    """Run ``call``, which runs ``n`` streams to termination, and return
+    the start events a Python listener got for them."""
+    runs = _Runs()
+    spark.streams.addListener(runs)
+    try:
+        call()
+        deadline = time.monotonic() + 60
+        while len(runs.terminated) < n:
+            assert time.monotonic() < deadline, "termination events not delivered"
+            time.sleep(0.05)
+    finally:
+        spark.streams.removeListener(runs)
+    assert {run for _, run in runs.started} == runs.terminated, "start events lost"
+    return runs.started
+
+
+def test_a_stream_started_in_a_build_reaches_python_listeners(spark):
+    from ecowatt_etl_spark.queries import registry
+
+    q44 = registry.all_queries()["q44_stream_tumbling"].fn
+    started = _stream_runs(spark, lambda: q44(spark, SF_SMOKE).collect(), 1)
+    assert [name for name, _ in started] == ["q44_stream_tumbling_sink"]
+
+
+def test_a_build_that_starts_a_stream_replays_on_every_call(spark, tmp_path):
+    from ecowatt_etl_spark.queries import registry
+    from ecowatt_etl_spark.streaming.events_stream import start_untagged
+
+    q149 = registry.all_queries()["q149_stream_cdc_upsert"].fn
+    got: list = []
+    started = _stream_runs(
+        spark, lambda: got.extend(_rows(q149(spark, SF_SMOKE)) for _ in range(2)), 2
+    )
+    assert len({run for _, run in started}) == 2
+    assert got[0] == got[1] and got[0]
+
+    # the stream's jobs are its build's only impurity: it writes a file
+    # outside sf_dir that the build then scans with a given schema
+    sf, src, out = tmp_path / "sf", tmp_path / "src", tmp_path / "out"
+    sf.mkdir()
+    src.mkdir()
+    _write(sf / "t.parquet", [(0, "-")])
+    _write(src / "t.parquet", [(1, "a")])
+
+    def replay(spark, sf_dir):
+        def write(batch, _):
+            batch.write.mode("overwrite").parquet(str(out))
+
+        start_untagged(
+            spark.readStream.schema("k long, v string").parquet(str(src))
+            .writeStream.foreachBatch(write)
+            .option("checkpointLocation", str(tmp_path / f"cp{len(runs)}"))
+            .trigger(availableNow=True)
+        ).awaitTermination()
+        return _read(spark, out)
+
+    fn, runs = _counted("replay", replay)
+    for i in (1, 2):
+        assert _rows(fn(spark, str(sf))) == [(1, "a")] and len(runs) == i
 
 
 @pytest.mark.parametrize("name", ["q65_ivf_topk", "q12_star_join"])

@@ -6,7 +6,8 @@ plans with, and a cache keyed on ``id(spark)`` can hand a new session a
 stopped one's artifact. The runtime test catches a conf write while a
 query runs; the source guards keep both patterns out of the package.
 The codegen test checks that a warm request reuses the classes an
-earlier one compiled instead of compiling them again.
+earlier one compiled instead of compiling them again, and the broadcast
+test that Spark's broadcast pieces stay out of G1's humongous regions.
 """
 
 from __future__ import annotations
@@ -84,6 +85,22 @@ def test_a_warm_serving_deck_reuses_its_generated_classes(spark):
     before = compiles.getCount()
     deck()
     assert compiles.getCount() - before <= 10
+
+
+def test_broadcast_pieces_are_under_half_a_g1_region(spark):
+    """G1 allocates an object of half a region or more as humongous, in
+    the old generation. Every broadcast allocates its first piece of
+    ``spark.broadcast.blockSize`` bytes plus a 16-byte array header in
+    full; at Spark's 4 MiB default that piece went humongous on every
+    heap this engine runs with (2 MB regions at perfbench's 3g, 4 MB at
+    this session's heap), which set the serving process's peak RSS."""
+    jvm = spark._jvm
+    block = spark.sparkContext._jsc.sc().conf().getSizeAsKb("spark.broadcast.blockSize", "4m")
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    region = int(bean.getVMOption("G1HeapRegionSize").getValue())
+    assert block * 1024 + 16 < region // 2, (block, region)
 
 
 def test_package_has_no_cache_keyed_on_the_id_of_a_session():
