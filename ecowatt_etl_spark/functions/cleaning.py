@@ -73,11 +73,6 @@ def regexp_extract_null(col: str | Column, pattern: str, group: int = 1) -> Colu
     return F.nullif(F.regexp_extract(_c(col), pattern, group), F.lit(""))
 
 
-def extract_model_year(col: str | Column) -> Column:
-    """F2 instance — 4-digit year out of a model string (main.py:55)."""
-    return regexp_extract_null(col, r"(\d{4})").cast("int")
-
-
 def strip_literal(col: str | Column, literal: str) -> Column:
     """F3 — literal (non-regex) substring removal, e.g. footnote '*'
     from prices (reference main.py:58). pandas str.replace is literal;

@@ -1,7 +1,7 @@
 """Relational + beyond-reference operators.
 
 Modules:
-    keys         — surrogate-key generation (O5) at dimension and fact scale
+    keys         — surrogate-key generation (O5)
     aggregations — grouped/global aggregate builders (A1–A7)
     joins        — join helpers: conformance full-outer, broadcast star (J1–J6)
     reshape      — wide↔long pivot/unpivot/union (R1–R3)

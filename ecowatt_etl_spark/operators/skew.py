@@ -31,27 +31,6 @@ def with_salt(df: DataFrame, n_salts: int, from_cols: list[str] | None = None) -
     return df.withColumn(SALT, F.pmod(F.hash(*cols), F.lit(n_salts)))
 
 
-def salted_count_sum(
-    df: DataFrame,
-    keys: list[str],
-    value_col: str,
-    n_salts: int = 8,
-    count_alias: str = "n",
-    sum_alias: str = "total",
-) -> DataFrame:
-    """Two-stage count+sum: stage 1 aggregates (keys, salt) — n_salts
-    partial rows per hot key, spread over n_salts reducers — stage 2
-    merges the tiny partials per key. Algebraic aggregates (count, sum,
-    min, max, avg-as-sum/count) all decompose this way."""
-    salted = with_salt(df, n_salts)
-    partial = salted.groupBy(*keys, SALT).agg(
-        F.count("*").alias("__pc"), F.sum(value_col).alias("__ps")
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("__pc").alias(count_alias), F.sum("__ps").alias(sum_alias)
-    )
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ecowatt_etl_spark.functions.cleaning import (
     guarded_div,
+    parse_dayfirst_date,
     pct_change,
     recode,
     regexp_extract_null,
@@ -129,7 +130,7 @@ def transform_pollution(poll_raw: DataFrame) -> DataFrame:
         )
         .filter(F.col("STATION").isin(*SUBURB_MAPPING.keys()))
         .withColumn("SUBURB", recode("STATION", SUBURB_MAPPING))
-        .withColumn("YEAR", F.year(F.to_date("Date", "d/M/yyyy")))
+        .withColumn("YEAR", F.year(parse_dayfirst_date("Date")))
         .filter(F.col("YEAR").isin(2022, 2023))
     )
 
@@ -363,7 +364,7 @@ def write_star_schema(
     fmt: str = "parquet",
     quality_gate: bool = True,
     plan_gate: bool = True,
-) -> dict[str, dict[str, object]]:
+) -> dict[str, dict[str, int]]:
     """Load stage (reference load_to_azure + CSV side-writes,
     main.py:214-236,345-346,351-369): facts partitioned by YEAR —
     partition pruning for every per-year dashboard query is free
@@ -377,13 +378,15 @@ def write_star_schema(
     carry no waivers — every join in this pipeline is broadcast/equi by
     design, so any banned shape is a regression.
 
-    ``quality_gate`` attaches ``observe()`` metrics to each fact write
-    (operators/quality.py) — the metrics ride the write job itself (no
-    validation re-scan) and the load REFUSES to pass silently if a fact
-    came out empty or its dimension join sprouted null surrogate keys:
-    the Spark-native form of the reference's post-stage print checks
-    (main.py:392-433), turned from console output into a hard gate.
-    Returns per-table collected metrics for caller-side audit logs.
+    ``quality_gate`` publishes each fact through
+    ``sources/expectations.write_checked``: the fact is written to a
+    staging directory with its row count and null-``id_suburb`` count
+    riding the write job itself (no validation re-scan), and is renamed
+    into place only if it has rows and no null surrogate keys. A failed
+    fact therefore never replaces the previous one: the Spark-native
+    form of the reference's post-stage print checks (main.py:392-433),
+    turned from console output into a hard gate. Returns each fact's
+    metrics for caller-side audit logs.
 
     After the plan gate the six writes run concurrently, one thread per
     table, so one table's planning and code generation on the driver
@@ -391,35 +394,32 @@ def write_star_schema(
     job group, local properties and session tags, so the write jobs
     are attributed (and cancellable) as the caller's. Every write is
     waited for; then the first failure in table order — a failed write
-    or a failed quality expectation — is raised."""
+    or a refused fact — is raised."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.util import inheritable_thread_target
 
-    from ecowatt_etl_spark.operators.quality import expect, observe_quality
     from ecowatt_etl_spark.plans.guard import assert_scalable
+    from ecowatt_etl_spark.sources.expectations import write_checked
 
     tables = star.tables()
     if plan_gate:
         for df in tables.values():
             assert_scalable(df)
 
-    def write(name: str, df: DataFrame) -> dict[str, object] | None:
-        obs = None
-        if quality_gate and name.startswith("fact_"):
-            df, obs = observe_quality(
-                df, name=f"load_{name}", null_cols=["id_suburb"]
-            )
+    def write(name: str, df: DataFrame) -> dict[str, int] | None:
+        path, fact = f"{out_dir}/{name}", name.startswith("fact_")
+        if fact and quality_gate:
+            checks = {"n_null_id_suburb": F.col("id_suburb").isNotNull()}
+            return write_checked(df, path, checks, fmt, partition_by=("YEAR",))
         writer = df.write.mode("overwrite")
-        if name.startswith("fact_"):
+        if fact:
             writer = writer.partitionBy("YEAR")
         if fmt == "csv":
-            writer.options(header=True).csv(f"{out_dir}/{name}")
+            writer.options(header=True).csv(path)
         else:
-            writer.parquet(f"{out_dir}/{name}")
-        if obs is None:
-            return None
-        return expect(obs, n_rows=lambda v: v > 0, n_null_id_suburb=lambda v: v == 0)
+            writer.parquet(path)
+        return None
 
     spark = star.dim_time.sparkSession
     with ThreadPoolExecutor(max_workers=len(tables)) as pool:
@@ -430,7 +430,7 @@ def write_star_schema(
             name: pool.submit(inheritable_thread_target(spark)(write), name, df)
             for name, df in tables.items()
         }
-    collected: dict[str, dict[str, object]] = {}
+    collected: dict[str, dict[str, int]] = {}
     for name, future in futures.items():
         metrics = future.result()
         if metrics is not None:

@@ -67,6 +67,14 @@ def get_spark(
     from ecowatt_etl_spark.streaming.proto_vendor import ensure_protobuf
 
     ensure_protobuf()
+    # Python workers import this package to unpickle its functions and
+    # data sources, and they take PYTHONPATH from the JVM's environment,
+    # fixed at launch: without the package's parent directory there, a
+    # session started outside the repository root fails every such query.
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     if master is None:

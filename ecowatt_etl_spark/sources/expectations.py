@@ -1,4 +1,4 @@
-"""Write-time data-quality gate: refuse to materialize a frame that
+"""Write-time data-quality gate: refuse to publish a frame that
 violates its declared expectations.
 
 q152's DQ audit reports violations after the fact; production
@@ -7,67 +7,24 @@ plans/guard.py's admission control: a batch that breaks an invariant
 (null keys, out-of-range money, dangling foreign keys) must fail the
 job loudly BEFORE it lands where downstream readers trust it.
 
-The check pass and the write share one computation: expectations are
-evaluated as conditional counts in a single aggregate over the frame
-(one extra action, no extra shuffle — each check is a map-side
-predicate), so the gate costs one scan, not one scan per rule. At
-100 TB the counts ride the write itself via q244's Observation
-pattern and the batch is validated post-write, pre-publish
-(write-audit-publish) — ``write_checked(strategy="auto")`` picks that
-staged path whenever Catalyst estimates the frame above
-:data:`STAGE_THRESHOLD_BYTES`, and the checkpoint-pinned path below.
+The gate is write-audit-publish (q244's Observation pattern): the
+frame is written once to a staging location with its row count and
+the expectation counts riding the write itself, so it audits exactly
+the rows that land at no extra scan, and only a clean batch is
+published into the target by rename. The paper's load publishes its
+two facts through it (``write_star_schema(quality_gate=True)``).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-class ExpectationError(RuntimeError):
-    """Raised when a frame violates its write expectations."""
-
-
-def check_expectations(
-    df: DataFrame, checks: dict[str, Column]
-) -> dict[str, int]:
-    """Evaluate all expectations in ONE aggregate: each value is a
-    boolean Column that must hold (evaluate to TRUE) per row — FALSE
-    and NULL both violate; returns violation counts per check name."""
-    if not checks:
-        return {}
-    # three-valued logic matters here: a NULL-evaluating condition is
-    # NOT TRUE, so it must count as a violation — when(cond, 0)
-    # .otherwise(1) sends both FALSE and NULL to 1, where the naive
-    # when(~cond, 1) form would silently wave NULLs through (the exact
-    # trap q257 pins)
-    row = df.agg(
-        *[
-            F.sum(F.when(cond, 0).otherwise(1)).cast("long").alias(name)
-            for name, cond in checks.items()
-        ]
-    ).collect()[0]
-    return {name: row[name] or 0 for name in checks}
-
-
-# Plan-estimated frame size above which write_checked's "auto"
-# strategy switches from localCheckpoint (executor memory) to the
-# staged write-audit-publish path (temp location + atomic rename).
-STAGE_THRESHOLD_BYTES = 1 << 30  # 1 GiB
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's size estimate for the frame (optimizedPlan stats) —
-    no action, no scan. Unknown-size plans report Long.MaxValue-ish
-    numbers, which correctly routes them to the staged path: staging
-    is the safe default, executor-memory checkpointing the small-frame
-    optimization."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # non-JVM frames (connect) — assume large
-        return 1 << 62
+class ExpectationError(ValueError):
+    """Raised when a frame violates its write expectations or is empty."""
 
 
 def _hadoop_fs(df: DataFrame, path: str):
@@ -81,46 +38,48 @@ def _hadoop_fs(df: DataFrame, path: str):
     return fs, jpath
 
 
-def _staged_write(
+def write_checked(
     df: DataFrame,
     path: str,
     checks: dict[str, Column],
-    fmt: str,
-    mode: str,
+    fmt: str = "parquet",
+    mode: str = "overwrite",
+    partition_by: Sequence[str] = (),
 ) -> dict[str, int]:
-    """Write-audit-publish (the q244 pattern, promoted to the gate):
-    the frame is written ONCE to a sibling staging location with the
-    expectation counts riding the write itself as Observation
-    accumulators — zero extra scan, zero extra action, no executor
-    memory pinned. The audit then reads the driver-side metrics row;
-    only a clean staging directory is PUBLISHED into ``path`` by
-    filesystem rename (atomic on HDFS-like stores; the standard
-    staged-commit pattern elsewhere). A violating batch never becomes
-    visible to readers of ``path`` — it dies in staging.
+    """Write-audit-publish ``df`` into ``path``: ``checks`` maps a name
+    to a per-row boolean Column that must hold. Returns the report
+    ``{"n_rows": n, <check>: violations, …}`` of the rows that landed;
+    raises :class:`ExpectationError` naming each failed metric as
+    ``name=value`` — a non-zero check count, or ``n_rows=0``, since an
+    empty overwrite would replace the previous generation with
+    nothing — and then ``path`` is untouched.
 
-    This is the 100 TB default: localCheckpoint would pin the whole
-    frame in executor block-manager memory/disk, while here the only
-    second touch of the data is a metadata rename."""
+    The frame is written ONCE to a sibling staging location with the
+    counts riding the write as Observation accumulators — no extra
+    scan, no executor memory pinned. Only a clean staging directory is
+    published into ``path`` by filesystem rename (atomic on HDFS-like
+    stores); a violating batch dies in staging. ``partition_by`` is
+    the writer's ``partitionBy``; a CSV batch keeps a header row."""
     from uuid import uuid4
 
     from pyspark.sql import Observation
 
     if mode not in ("overwrite", "append"):
-        raise ValueError(
-            f"staged write_checked supports overwrite/append, got {mode!r}"
-        )
+        raise ValueError(f"write_checked supports overwrite/append, got {mode!r}")
     obs = Observation()
     staging = f"{path}__staging_{uuid4().hex}"
-    observed = (
-        df.observe(
-            obs,
-            *[
-                F.sum(F.when(cond, 0).otherwise(1)).cast("long").alias(name)
-                for name, cond in checks.items()
-            ],
-        )
-        if checks
-        else df
+    # three-valued logic matters here: a NULL-evaluating condition is
+    # NOT TRUE, so it must count as a violation — when(cond, 0)
+    # .otherwise(1) sends both FALSE and NULL to 1, where the naive
+    # when(~cond, 1) form would silently wave NULLs through (the exact
+    # trap q257 pins)
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        *[
+            F.sum(F.when(cond, 0).otherwise(1)).cast("long").alias(name)
+            for name, cond in checks.items()
+        ],
     )
     fs, _ = _hadoop_fs(df, path)
     jvm_path = df.sparkSession._jvm.org.apache.hadoop.fs.Path
@@ -138,22 +97,41 @@ def _staged_write(
                 f"{staging} for manual recovery"
             )
 
+    def _move_into(src, dst) -> None:
+        # part filenames embed the job UUID, so batches never collide;
+        # a partition directory the target already has is merged into
+        for status in fs.listStatus(src):
+            name = status.getPath().getName()
+            if name.startswith("_"):  # _SUCCESS etc.
+                continue
+            into = jvm_path(dst, name)
+            if status.isDirectory() and fs.exists(into):
+                _move_into(status.getPath(), into)
+            else:
+                _publish_rename(status.getPath(), into)
+
     # keep_staging: set once the batch is audited clean, so a failed
     # PUBLISH preserves the data; cleanup still removes staging for
     # write failures and expectation violations (a bad batch dies in
     # staging by design) and after a confirmed publish (leftovers).
     keep_staging = False
     try:
-        observed.write.mode("overwrite").format(fmt).save(staging)
-        report = (
-            {name: obs.get[name] or 0 for name in checks} if checks else {}
-        )
-        violated = {k: v for k, v in report.items() if v}
-        if violated:
+        writer = observed.write.mode("overwrite").format(fmt)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        if fmt == "csv":
+            writer = writer.option("header", True)
+        writer.save(staging)
+        metrics = obs.get
+        report = {name: metrics[name] or 0 for name in ("n_rows", *checks)}
+        failed = [f"{k}={report[k]}" for k in checks if report[k]]
+        if report["n_rows"] == 0:
+            failed.insert(0, "n_rows=0")
+        if failed:
             raise ExpectationError(
-                f"refusing to publish {path}: violated expectations "
-                f"{violated} (counts are rows failing the declared per-row "
-                "condition; the staged batch was discarded)"
+                f"refusing to publish {path}: {', '.join(failed)} (a check "
+                "counts rows failing its per-row condition; the staged "
+                "batch was discarded)"
             )
         keep_staging = True
         target = jvm_path(path)
@@ -174,82 +152,13 @@ def _staged_write(
             keep_staging = False
             if had_old:
                 fs.delete(retired, True)
-        elif mode == "append":
-            if not fs.exists(target):
-                _publish_rename(st_path, target)
-                keep_staging = False
-            else:
-                # move data files in; part filenames embed the job UUID
-                # so cross-batch collisions cannot occur
-                for status in fs.listStatus(st_path):
-                    name = status.getPath().getName()
-                    if name.startswith("_"):  # _SUCCESS etc.
-                        continue
-                    _publish_rename(
-                        status.getPath(), jvm_path(f"{path}/{name}")
-                    )
-                keep_staging = False  # only _SUCCESS-style markers remain
+        elif not fs.exists(target):
+            _publish_rename(st_path, target)
+            keep_staging = False
+        else:
+            _move_into(st_path, target)
+            keep_staging = False  # only _SUCCESS-style markers remain
         return report
     finally:
         if not keep_staging and fs.exists(st_path):
             fs.delete(st_path, True)
-
-
-def write_checked(
-    df: DataFrame,
-    path: str,
-    checks: dict[str, Column],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    strategy: str = "auto",
-) -> dict[str, int]:
-    """Gate-then-write: evaluate ``checks`` (name -> per-row boolean
-    Column), raise :class:`ExpectationError` naming every violated
-    expectation and its count if any fail, otherwise write and return
-    the (all-zero) violation report for the job log.
-
-    ``strategy`` picks how the check and the write are pinned to ONE
-    materialization (the invariant either way: the gate must audit
-    exactly the rows that land):
-
-    * ``"checkpoint"`` — localCheckpoint the frame eagerly, audit the
-      pinned blocks, then write them. One extra aggregate action over
-      materialized blocks; the frame occupies executor block-manager
-      storage for the duration. Right for small/medium frames.
-    * ``"stage"`` — write-audit-publish: write once to a staging
-      location with the counts riding the write as Observation
-      accumulators, then publish by rename only if clean. No executor
-      memory pinned, no second scan — the 100 TB path.
-    * ``"auto"`` (default) — ``stage`` when Catalyst's plan-size
-      estimate exceeds :data:`STAGE_THRESHOLD_BYTES` (or is unknown),
-      else ``checkpoint``.
-    """
-    if strategy == "auto":
-        strategy = (
-            "stage"
-            if _plan_size_bytes(df) > STAGE_THRESHOLD_BYTES
-            else "checkpoint"
-        )
-    if strategy == "stage":
-        return _staged_write(df, path, checks, fmt, mode)
-    if strategy != "checkpoint":
-        raise ValueError(f"unknown write_checked strategy {strategy!r}")
-    # Pin ONE materialization for both the check and the write: the
-    # two actions otherwise recompute the frame independently, so a
-    # non-deterministic expression (rand, current_timestamp, shuffling
-    # UDx output) or a source mutated between the scans could land rows
-    # the gate never saw. localCheckpoint truncates the lineage to the
-    # materialized blocks; eager=True runs the single computation here.
-    pinned = df.localCheckpoint(eager=True)
-    try:
-        report = check_expectations(pinned, checks)
-        violated = {k: v for k, v in report.items() if v}
-        if violated:
-            raise ExpectationError(
-                f"refusing to write {path}: violated expectations {violated} "
-                "(counts are rows failing the declared per-row condition)"
-            )
-        pinned.write.mode(mode).format(fmt).save(path)
-    finally:
-        pinned.unpersist()
-    return report

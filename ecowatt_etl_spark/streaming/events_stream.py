@@ -722,18 +722,14 @@ def stateful_clamped_balance(
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents table (schema taken from
-    one batch footer read — streaming sources need it explicit). The
-    single ordered file arrives as one micro-batch in this harness;
-    a live deployment's chunked arrivals hit the same code path (the
-    q49-family chunk-replay machinery drives multi-batch cases)."""
-    schema = (
-        spark.read.option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .schema
-    )
+    """File-source stream over the documents table (schema inferred
+    once per file version by ``inferred_schema`` — streaming sources
+    need it explicit). The single ordered file arrives as one
+    micro-batch in this harness; a live deployment's chunked arrivals
+    hit the same code path (the q49-family chunk-replay machinery
+    drives multi-batch cases)."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(inferred_schema(spark, sf_dir, "documents.parquet"))
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

@@ -144,21 +144,3 @@ def test_write_quality_gate_metrics(star, spark, tmp_path):
     assert metrics["fact_ev_impact"]["n_rows"] == 36
     assert metrics["fact_energy_pollution"]["n_rows"] == 72
     assert metrics["fact_ev_impact"]["n_null_id_suburb"] == 0
-
-
-def test_observe_expect_raises_on_violation(spark):
-    from pyspark.sql import functions as F
-
-    from ecowatt_etl_spark.operators.quality import expect, observe_quality
-
-    df = spark.createDataFrame(
-        [(1, None), (2, "x")], "id long, name string"
-    )
-    observed, obs = observe_quality(
-        df, name="unit_q", extra={"max_id": F.max("id")}
-    )
-    observed.write.format("noop").mode("overwrite").save()
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="n_null_name"):
-        expect(obs, n_rows=lambda v: v == 2, n_null_name=lambda v: v == 0)

@@ -6,14 +6,19 @@ plans with, and a cache keyed on ``id(spark)`` can hand a new session a
 stopped one's artifact. The runtime test catches a conf write while a
 query runs; the source guards keep both patterns out of the package.
 The codegen test checks that a warm request reuses the classes an
-earlier one compiled instead of compiling them again, and the broadcast
-test that Spark's broadcast pieces stay out of G1's humongous regions.
+earlier one compiled instead of compiling them again, the broadcast
+test that Spark's broadcast pieces stay out of G1's humongous regions,
+and the last test that a session started outside the repository root
+still runs queries whose Python workers import the package.
 """
 
 from __future__ import annotations
 
 import ast
+import os
 import pathlib
+import subprocess
+import sys
 import threading
 
 from tests.conftest import SF_ORACLE as SF
@@ -32,12 +37,14 @@ _SERVING_RELATIONAL = [
     "q48_range_lookback", "q49f_funnel", "q164_ohlc_bars",
 ]
 
-# The streaming replays' RocksDB provider choice is still set and
-# restored per run. ROADMAP direction 4 removes these two sites by
-# building each replay in its own spark.newSession().
+# The streaming replays' RocksDB provider choice (q277, q49c) and their
+# shuffle-partition count (the two stream runners) are still set and
+# restored per run. ROADMAP direction 4 is to remove these four sites.
 _CONF_SET_ALLOWED = {
     ("queries/event_queries.py", "q277_stream_totals_tws"),
     ("queries/event_queries.py", "q49c_stream_dedup"),
+    ("streaming/events_stream.py", "run_to_completion"),
+    ("streaming/events_stream.py", "stream_rollup_to_parquet"),
 }
 
 
@@ -131,5 +138,28 @@ def _conf_set_sites(sub: str) -> set[tuple[str, str]]:
 
 
 def test_query_paths_write_session_conf_only_at_the_allowlist():
-    sites = _conf_set_sites("queries") | _conf_set_sites("operators")
+    sites = _conf_set_sites("queries") | _conf_set_sites("operators") | _conf_set_sites("streaming")
     assert sites == _CONF_SET_ALLOWED
+
+
+def test_python_workers_import_the_package_outside_the_repo_root(tmp_path):
+    """q193 reads a Python data source defined in the package, so its
+    workers import ``ecowatt_etl_spark``; a driver that found the package
+    through ``sys.path`` alone, started in another directory, must still
+    get rows."""
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(PKG.parent)!r})\n"
+        "from ecowatt_etl_spark.session import get_spark\n"
+        "from ecowatt_etl_spark.queries.relational import q193_python_datasource\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"
+        f"print('ROWS', len(q193_python_datasource(spark, {SF_SMOKE!r}).collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    rows = [ln for ln in run.stdout.splitlines() if ln.startswith("ROWS ")]
+    assert rows and int(rows[-1].split()[1]) > 0, run.stdout[-2000:]

@@ -571,7 +571,7 @@ def test_write_checked_gates_on_expectations(spark, tmp_path):
         "price_in_range": F.col("l_extendedprice").between(0, 10_000_000),
     }
     report = write_checked(li, out, checks)
-    assert report == {k: 0 for k in checks}
+    assert report == {"n_rows": li.count(), **{k: 0 for k in checks}}
     assert os.path.exists(out)
 
     bad = li.withColumn(
@@ -623,8 +623,8 @@ def test_write_checked_staged_publishes_only_clean_batches(spark, tmp_path):
         "qty_positive": F.col("l_quantity") > 0,
     }
     out = str(tmp_path / "staged_ok")
-    report = write_checked(li, out, checks, strategy="stage")
-    assert report == {k: 0 for k in checks}
+    report = write_checked(li, out, checks)
+    assert report == {"n_rows": li.count(), **{k: 0 for k in checks}}
     assert os.path.exists(out)
     assert spark.read.parquet(out).count() == li.count()
 
@@ -636,7 +636,7 @@ def test_write_checked_staged_publishes_only_clean_batches(spark, tmp_path):
     )
     out2 = str(tmp_path / "staged_bad")
     with pytest.raises(ExpectationError, match="qty_positive"):
-        write_checked(bad, out2, checks, strategy="stage")
+        write_checked(bad, out2, checks)
     assert not os.path.exists(out2), "violating staged batch must not publish"
     litter = [p for p in os.listdir(tmp_path) if "__staging_" in p]
     assert not litter, f"staging directories must be cleaned up: {litter}"
@@ -655,29 +655,9 @@ def test_write_checked_staged_append_accumulates(spark, tmp_path):
     n = load_table(spark, SF_SMOKE, "nation")
     out = str(tmp_path / "staged_append")
     checks = {"key_not_null": F.col("n_nationkey").isNotNull()}
-    write_checked(n, out, checks, mode="append", strategy="stage")
-    write_checked(n, out, checks, mode="append", strategy="stage")
+    write_checked(n, out, checks, mode="append")
+    write_checked(n, out, checks, mode="append")
     assert spark.read.parquet(out).count() == 2 * n.count()
-
-
-def test_write_checked_auto_routes_by_plan_size(spark):
-    """auto = checkpoint for small frames, stage above the threshold
-    (and for unknown-size plans): pin the routing so a regression
-    can't silently put a 100 TB frame back in executor memory."""
-    import ecowatt_etl_spark.sources.expectations as ex
-    from ecowatt_etl_spark.sources.tables import load_table
-
-    from tests.conftest import SF_SMOKE
-
-    n = load_table(spark, SF_SMOKE, "nation")
-    small = ex._plan_size_bytes(n)
-    assert 0 < small < ex.STAGE_THRESHOLD_BYTES
-    # a join with no stats-known bound estimates multiplicatively and
-    # must cross the threshold -> staged path
-    big = n.crossJoin(load_table(spark, SF_SMOKE, "orders")).crossJoin(
-        load_table(spark, SF_SMOKE, "lineitem")
-    )
-    assert ex._plan_size_bytes(big) > ex.STAGE_THRESHOLD_BYTES
 
 
 def test_write_checked_staged_publish_failure_preserves_batch(
@@ -728,13 +708,13 @@ def test_write_checked_staged_publish_failure_preserves_batch(
     checks = {"key_not_null": F.col("n_nationkey").isNotNull()}
 
     # seed a good batch BEFORE the failure injection
-    ex.write_checked(n, out, checks, strategy="stage")
+    ex.write_checked(n, out, checks)
     assert spark.read.parquet(out).count() == n.count()
 
     monkeypatch.setattr(ex, "_hadoop_fs", wrapped)
     with pytest.raises(OSError, match="returned false"):
         ex.write_checked(
-            n.limit(3), out, checks, mode="overwrite", strategy="stage"
+            n.limit(3), out, checks, mode="overwrite"
         )
     # previous good batch restored from the retired name, not lost
     assert spark.read.parquet(out).count() == n.count()
@@ -746,7 +726,7 @@ def test_write_checked_staged_publish_failure_preserves_batch(
     # append publish: per-file renames into the target also flagged
     with pytest.raises(OSError, match="returned false"):
         ex.write_checked(
-            n.limit(5), out, checks, mode="append", strategy="stage"
+            n.limit(5), out, checks, mode="append"
         )
     assert spark.read.parquet(out).count() == n.count()
 
@@ -770,9 +750,9 @@ def test_write_checked_staged_overwrite_retires_old_target(spark, tmp_path):
     n = load_table(spark, SF_SMOKE, "nation")
     out = str(tmp_path / "staged_overwrite")
     checks = {"key_not_null": F.col("n_nationkey").isNotNull()}
-    write_checked(n, out, checks, strategy="stage")
+    write_checked(n, out, checks)
     write_checked(
-        n.limit(7), out, checks, mode="overwrite", strategy="stage"
+        n.limit(7), out, checks, mode="overwrite"
     )
     assert spark.read.parquet(out).count() == 7
     litter = [
@@ -782,7 +762,7 @@ def test_write_checked_staged_overwrite_retires_old_target(spark, tmp_path):
     ]
     assert not litter, f"clean publish must leave no litter: {litter}"
     with pytest.raises(ValueError, match="overwrite/append"):
-        write_checked(n, out, checks, mode="error", strategy="stage")
+        write_checked(n, out, checks, mode="error")
 
 
 def test_avro_python_edge_cases(spark, tmp_path):

@@ -148,3 +148,20 @@ def test_stream_reader_memoises_ts_inference_per_file_version(spark, tmp_path):
         "2024-03-01 12:30:02.250",
         "2024-03-02 08:15:03.000",
     ]
+
+
+def test_documents_stream_reader_memoises_schema_inference(spark, tmp_path):
+    """read_documents_stream infers the documents schema once per file
+    version, as read_events_stream does: its second call launches no
+    Spark job."""
+    from ecowatt_etl_spark.streaming.events_stream import read_documents_stream
+    from tests.conftest import jobs_in_group
+
+    pq.write_table(
+        pa.table({"doc_id": [1, 2], "text": ["a b", "c"]}), str(tmp_path / "documents.parquet")
+    )
+    cold_df, cold = jobs_in_group(spark, lambda: read_documents_stream(spark, str(tmp_path)))
+    assert cold >= 1  # inference is a job: the check below can see one
+    warm_df, warm = jobs_in_group(spark, lambda: read_documents_stream(spark, str(tmp_path)))
+    assert warm == 0
+    assert warm_df.isStreaming and warm_df.schema == cold_df.schema
